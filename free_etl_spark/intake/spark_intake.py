@@ -205,12 +205,14 @@ def validate_file(spark: SparkSession, path: str, cfg: AppConfig) -> tuple[Spark
     except Exception as e:
         first = str(e).splitlines()[0] if str(e) else repr(e)
         audit.issues.append(f"Failed to parse file: {first[:300]}")
-        if df is not None:
-            df.unpersist()
-        df = None
 
     audit.acceptable = not audit.issues
-    return audit, (df if audit.acceptable else None)
+    if not audit.acceptable and df is not None:
+        # a rejected file's relation must not stay cached: Spark would
+        # serve a later read of the same path from it
+        df.unpersist()
+        df = None
+    return audit, df
 
 
 def normalize_to_csv(df: DataFrame, out_dir: str, out_name: str, single_file: bool = True) -> str:

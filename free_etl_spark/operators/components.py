@@ -6,16 +6,18 @@ Each node starts labeled with itself; every iteration each node takes
 the minimum label among itself and its neighbors; converged when no
 label changes. Iteration count is the graph diameter (near-dup graphs
 are shallow — dozens of iterations at most), and each iteration is one
-join + one aggregate, all shuffles keyed on node id. The driver-side
-loop only reads a single convergence scalar per iteration — the data
-never leaves the cluster, which is what keeps this shape valid at
-100 TB (this is the standard label-propagation construction, cf.
-GraphFrames/Pregel-style iteration).
+join + one aggregate, all shuffles keyed on node id. Each iteration
+runs one Spark action, the eager checkpoint of the new labels; the
+driver-side loop reads a single convergence scalar per iteration from
+an ``Observation`` on that checkpoint job — the data never leaves the
+cluster, which is what keeps this shape valid at 100 TB (this is the
+standard label-propagation construction, cf. GraphFrames/Pregel-style
+iteration).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -41,8 +43,10 @@ def connected_components(
         .distinct()
         .localCheckpoint(eager=True)
     )
+    # not checkpointed: the first round's checkpoint materializes the
+    # labels, and the callers' nodes are a lake read or a small
+    # aggregate, cheaper to re-read in round one than a job of its own
     labels = nodes.select(F.col(node_col).alias("a"), F.col(node_col).alias("label"))
-    labels = labels.localCheckpoint(eager=True)
 
     for _ in range(max_iter):
         neighbor_min = (
@@ -50,27 +54,18 @@ def connected_components(
             .groupBy("a")
             .agg(F.min("label").alias("nbr_label"))
         )
-        # carry the did-anything-change flag ON the label rows: the
-        # convergence probe is then a cheap aggregate over the freshly
-        # checkpointed result, not another join against the old labels
-        new_labels = (
-            labels.join(neighbor_min, "a", "left")
-            .select(
-                "a",
-                F.least(
-                    F.col("label"), F.coalesce("nbr_label", F.col("label"))
-                ).alias("label"),
-                (F.coalesce("nbr_label", F.col("label")) < F.col("label"))
-                .cast("int")
-                .alias("__chg"),
-            )
-        )
+        nbr = F.coalesce("nbr_label", F.col("label"))
         # truncate lineage each round (iterative plans grow exponentially
-        # otherwise) and check convergence with one scalar action
-        new_labels = new_labels.localCheckpoint(eager=True)
-        changed = new_labels.agg(F.max("__chg")).first()[0]
-        labels = new_labels.drop("__chg")
-        if not changed:
+        # otherwise); the did-anything-change flag rides on the same job
+        # as an observed aggregate instead of a second action
+        obs = Observation()
+        labels = (
+            labels.join(neighbor_min, "a", "left")
+            .observe(obs, F.max((nbr < F.col("label")).cast("int")).alias("chg"))
+            .select("a", F.least(F.col("label"), nbr).alias("label"))
+            .localCheckpoint(eager=True)
+        )
+        if not obs.get["chg"]:
             break
 
     return labels.select(F.col("a").alias(node_col), F.col("label").alias("component"))

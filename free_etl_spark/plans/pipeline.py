@@ -23,6 +23,13 @@ Design:
   current); mismatch/missing → rebuild, overwrite, stamp. The returned
   manifest records built/skipped per step — the audit trail every
   scheduled run ships.
+- A step's ``_meta.json`` holds ``signature``, ``rows`` and ``schema``
+  (the written DataFrame's ``StructType`` as JSON). ``rows`` comes from
+  an ``Observation`` on the write itself and ``schema`` lets a
+  dependent step read the parquet without a footer-inference job, so
+  bookkeeping adds no Spark job to a build. A ``_meta.json`` without
+  ``schema`` (written before it was recorded) is still valid: that dep
+  is read with schema inference, and its signature still skips.
 
 Scale notes: signatures read file LISTINGS only (no data); each step
 writes through the engine's normal partitioned writers, so a 100 TB
@@ -45,7 +52,9 @@ import shutil
 from dataclasses import dataclass, field
 from typing import Callable, Mapping, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 @dataclass
@@ -108,6 +117,25 @@ def _topo(steps: Sequence[Step]) -> list[Step]:
     return out
 
 
+def _read_meta(out_dir: str) -> dict:
+    """A step's ``_meta.json``, or {} when it is missing or unreadable
+    (either forces a rebuild)."""
+    try:
+        with open(os.path.join(out_dir, "_meta.json")) as f:
+            meta = json.load(f)
+    except (OSError, ValueError):
+        return {}
+    return meta if isinstance(meta, dict) else {}
+
+
+def _read_step(spark: SparkSession, path: str, schema: dict | None) -> DataFrame:
+    """Read a materialized step with its recorded schema; infer it only
+    for a step stamped before schemas were recorded."""
+    if schema is None:
+        return spark.read.parquet(path)
+    return spark.read.schema(StructType.fromJson(schema)).parquet(path)
+
+
 def run_pipeline(
     spark: SparkSession,
     steps: Sequence[Step],
@@ -115,9 +143,13 @@ def run_pipeline(
 ) -> dict:
     """Materialize the DAG into ``lake_dir``; return the run manifest
     {step: {action, signature, rows?}} (rows recorded on build only —
-    skipped steps are not re-counted, that's the point)."""
+    skipped steps are not re-counted, that's the point). Bookkeeping
+    adds no Spark job to a build: ``rows`` is observed on the step's
+    write, and deps are read with the schema their ``_meta.json``
+    records."""
     os.makedirs(lake_dir, exist_ok=True)
     sigs: dict[str, str] = {}
+    schemas: dict[str, dict | None] = {}
     manifest: dict[str, dict] = {}
     for step in _topo(steps):
         h = hashlib.sha256()
@@ -135,27 +167,26 @@ def run_pipeline(
         # __building dir is by definition unpromoted)
         shutil.rmtree(out_dir + "__retired", ignore_errors=True)
         shutil.rmtree(out_dir + "__building", ignore_errors=True)
-        meta_path = os.path.join(out_dir, "_meta.json")
-        stored = None
-        if os.path.exists(meta_path):
-            try:
-                stored = json.load(open(meta_path)).get("signature")
-            except Exception:
-                stored = None
-        if stored == sig:
+        meta = _read_meta(out_dir)
+        if meta.get("signature") == sig:
+            schemas[step.name] = meta.get("schema")
             manifest[step.name] = {"action": "skipped", "signature": sig}
             continue
 
         inputs = {
-            d: spark.read.parquet(os.path.join(lake_dir, d)) for d in step.deps
+            d: _read_step(spark, os.path.join(lake_dir, d), schemas[d])
+            for d in step.deps
         }
         df = step.build(spark, inputs)
+        schema = df.schema.jsonValue()
         tmp_dir = out_dir + "__building"
-        shutil.rmtree(tmp_dir, ignore_errors=True)
-        df.write.mode("overwrite").parquet(tmp_dir)
-        rows = spark.read.parquet(tmp_dir).count()
+        obs = Observation()
+        df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+            "overwrite"
+        ).parquet(tmp_dir)
+        rows = int(obs.get["rows"])
         with open(os.path.join(tmp_dir, "_meta.json"), "w") as f:
-            json.dump({"signature": sig, "rows": rows}, f)
+            json.dump({"signature": sig, "rows": rows, "schema": schema}, f)
         # rename-aside promote (never rmtree-the-live-then-rename: a
         # crash between those left NEITHER old nor new — ADVICE r11).
         retired = out_dir + "__retired"
@@ -163,6 +194,7 @@ def run_pipeline(
             os.rename(out_dir, retired)
         os.rename(tmp_dir, out_dir)
         shutil.rmtree(retired, ignore_errors=True)
+        schemas[step.name] = schema
         manifest[step.name] = {
             "action": "built",
             "signature": sig,
@@ -230,7 +262,8 @@ def run_partitioned_step(
     stored: dict[str, str] = {}
     if os.path.exists(parts_path):
         try:
-            stored = json.load(open(parts_path))
+            with open(parts_path) as f:
+                stored = json.load(f)
         except Exception:
             stored = {}
 

@@ -5,9 +5,12 @@ direct computation."""
 
 from __future__ import annotations
 
+import dataclasses
+import json
 import os
 
 import pyspark.sql.functions as F
+from pyspark.sql.types import StructType
 
 from free_etl_spark.plans.pipeline import Step, run_pipeline
 from free_etl_spark.tables import load_table
@@ -203,6 +206,89 @@ def test_pipeline_crash_between_steps_recovers(spark, tmp_path):
         for r in spark.read.parquet(os.path.join(lake, "by_lang")).collect()
     }
     assert got == direct
+
+
+def _meta(lake: str, step: str) -> dict:
+    with open(os.path.join(lake, step, "_meta.json")) as f:
+        return json.load(f)
+
+
+def test_pipeline_rows_and_schema_recorded_at_write(spark, tmp_path):
+    """Each built step's manifest ``rows`` (observed on the write) equals
+    a count of what was written — a zero-row build included, which must
+    report 0 rather than block on the observation — and its
+    ``_meta.json`` schema round-trips through ``StructType.fromJson`` to
+    the schema the written parquet reads back with."""
+    lake = str(tmp_path / "lake")
+    steps = _steps(SF_DIR) + [
+        Step(
+            "none",
+            lambda sp, inputs: inputs["docs"].filter(F.col("n_chars") < 0),
+            deps=["docs"],
+        )
+    ]
+    m = run_pipeline(spark, steps, lake)
+    assert m["none"]["rows"] == 0
+    for step, rec in m.items():
+        assert rec["action"] == "built"
+        written = spark.read.parquet(os.path.join(lake, step))
+        assert rec["rows"] == written.count()
+        meta = _meta(lake, step)
+        assert meta["rows"] == rec["rows"]
+        schema = StructType.fromJson(meta["schema"])
+        assert schema.jsonValue() == meta["schema"]
+        assert [(f.name, f.dataType) for f in schema] == [
+            (f.name, f.dataType) for f in written.schema
+        ]
+    assert m["docs"]["rows"] > m["filtered"]["rows"] > 0
+
+
+def test_pipeline_reads_lake_without_recorded_schema(spark, tmp_path):
+    """A lake whose ``_meta.json`` files carry no ``schema`` (stamped
+    before schemas were recorded) stays valid: clean steps still skip,
+    a dirty step reads its deps by schema inference, and the rebuilt
+    output is unchanged."""
+    lake = str(tmp_path / "lake")
+    run_pipeline(spark, _steps(SF_DIR), lake)
+    before = sorted(
+        map(tuple, spark.read.parquet(os.path.join(lake, "by_lang")).collect())
+    )
+    for step in ("docs", "filtered", "by_lang"):
+        meta = _meta(lake, step)
+        del meta["schema"]
+        with open(os.path.join(lake, step, "_meta.json"), "w") as f:
+            json.dump(meta, f)
+
+    steps = _steps(SF_DIR)
+    steps[2] = dataclasses.replace(steps[2], version="2")
+    m = run_pipeline(spark, steps, lake)
+    assert m["docs"]["action"] == "skipped"
+    assert m["filtered"]["action"] == "skipped"
+    assert m["by_lang"]["action"] == "built"
+    assert m["by_lang"]["rows"] == len(before)
+    after = sorted(
+        map(tuple, spark.read.parquet(os.path.join(lake, "by_lang")).collect())
+    )
+    assert after == before
+    assert "schema" in _meta(lake, "by_lang")
+
+
+def test_pipeline_job_count_guard(spark, tmp_path):
+    """A fresh 3-step build runs only its steps' own jobs: no count job
+    or footer-inference read per step. 5 jobs measured: the documents
+    source read infers its schema (1), docs and filtered write (1 each),
+    and by_lang's aggregate writes after a shuffle (2). Counting rows
+    by re-reading each output and reading deps by schema inference
+    measured 16."""
+    sc = spark.sparkContext
+    group = f"pipeline-job-guard-{tmp_path.name}"
+    sc.setJobGroup(group, "")
+    try:
+        run_pipeline(spark, _steps(SF_DIR), str(tmp_path / "lake"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 5, f"{len(jobs)} jobs for a 3-step build"
 
 
 # ── partition-grain backfill (run_partitioned_step) ─────────────────

@@ -69,6 +69,30 @@ def test_validate_file_duplicate_raw_header(spark, tmp_path):
     assert df is None
 
 
+def test_validate_file_rejected_file_leaves_nothing_cached(spark, tmp_path):
+    """A file rejected for its raw header is still parsed for its audit;
+    its persisted relation must be released, so a rewrite of the same
+    path in place is read fresh, not served from Spark's cache."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    n_cached = cache.numCachedEntries()
+    p = tmp_path / "dup.csv"
+    write(p, b"sku,sku,qty\n1,2,3\n")
+    audit, df = validate_file(spark, str(p), CFG)
+    assert not audit.acceptable and df is None
+    assert cache.numCachedEntries() == n_cached
+
+    write(p, b"sku,price,qty\n4,5,6\n7,8,9\n")
+    audit, df = validate_file(spark, str(p), CFG)
+    assert audit.acceptable and audit.row_count == 2
+    try:
+        assert sorted(map(tuple, df.collect())) == [
+            ("4", "5", "6"),
+            ("7", "8", "9"),
+        ]
+    finally:
+        df.unpersist()
+
+
 def test_validate_file_latin1(spark, tmp_path):
     p = tmp_path / "latin1.csv"
     write(p, "name,city\nJosé,Bogotá\n".encode("latin-1"))
