@@ -19,6 +19,7 @@ import os
 import shutil
 from dataclasses import dataclass, field
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -359,4 +360,9 @@ def _ingest_files(
     if len(paths) <= 1 or max_concurrent <= 1:
         return [one(p) for p in paths]
     with ThreadPoolExecutor(max_workers=max_concurrent) as pool:
-        return list(pool.map(one, paths))
+        # a wrapper per file: each carries a clone of the caller's job
+        # group, description and tags onto the pool thread
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(one), p) for p in paths
+        ]
+        return [f.result() for f in futures]

@@ -18,11 +18,26 @@ Design:
   fingerprints). Source fingerprint = (relative path, byte size) of
   every data file under the source table — rename- and append-
   sensitive, mtime-free (mtimes don't survive copies).
-- ``run_pipeline`` topo-sorts, and for each step compares the stored
-  ``_meta.json`` signature: match → SKIP (the materialized parquet is
-  current); mismatch/missing → rebuild, overwrite, stamp. The returned
-  manifest records built/skipped per step — the audit trail every
-  scheduled run ships.
+- ``run_pipeline`` runs in two phases. PLAN, on the calling thread in
+  topo order: compute every signature, sweep swap debris and compare
+  each stored ``_meta.json`` signature: match → SKIP (the materialized
+  parquet is current, its recorded schema is known), mismatch/missing
+  → dirty. A signature depends only on versions, dep signatures and
+  source listings, never on a build, so the whole skip set is known
+  before anything builds. RUN: every dirty step whose deps are done is
+  submitted to a thread pool sized to the dirty set (threads start
+  lazily, so the DAG's real width bounds them); a worker reads its
+  deps with their recorded schemas, builds the step and writes it to
+  its ``__building`` dir; the calling thread promotes each finished
+  step and submits the steps it made ready. Independent branches thus
+  run their Spark jobs side by side, while every live-dir mutation
+  stays on one thread. Each submit is wrapped in its own
+  ``inheritable_thread_target(spark)``, so every step inherits the
+  caller's job group, description and tags, and a step that sets its
+  own job group changes only its own (one wrapper shared by all
+  submits shares one cloned ``Properties`` object). The returned
+  manifest, in topo order, records built/skipped per step — the audit
+  trail every scheduled run ships.
 - A step's ``_meta.json`` holds ``signature``, ``rows`` and ``schema``
   (the written DataFrame's ``StructType`` as JSON). ``rows`` comes from
   an ``Observation`` on the write itself and ``schema`` lets a
@@ -40,7 +55,11 @@ tmp -> live, delete retired — the compact_parquet discipline,
 operators/maintenance.py): a crash at any point leaves either the old
 materialization readable or the step missing its ``_meta.json``, which
 forces a rebuild — never a half-written live dir. Leftover
-``__building``/``__retired`` dirs are swept on the next run.
+``__building``/``__retired`` dirs are swept on the next run. When a
+build raises, no further step starts; the steps already in flight
+finish and are promoted, then the first error propagates. The next
+run therefore skips those steps and builds only the failed step, its
+dirty suffix and whatever never started.
 """
 
 from __future__ import annotations
@@ -49,9 +68,11 @@ import hashlib
 import json
 import os
 import shutil
+from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 from typing import Callable, Mapping, Sequence
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -136,31 +157,74 @@ def _read_step(spark: SparkSession, path: str, schema: dict | None) -> DataFrame
     return spark.read.schema(StructType.fromJson(schema)).parquet(path)
 
 
+def _signature(step: Step, sigs: Mapping[str, str]) -> str:
+    h = hashlib.sha256()
+    h.update(f"v={step.version};".encode())
+    for d in step.deps:
+        h.update(f"dep={d}:{sigs[d]};".encode())
+    for src in step.sources:
+        h.update(f"src={_source_fingerprint(src)};".encode())
+    return h.hexdigest()
+
+
+def _build_step(
+    spark: SparkSession,
+    step: Step,
+    lake_dir: str,
+    sig: str,
+    dep_schemas: Mapping[str, dict | None],
+) -> tuple[dict, int]:
+    """Build one step into its ``__building`` dir and stamp its
+    ``_meta.json`` there; return (schema, rows). Runs on a pool
+    thread and touches no live dir."""
+    inputs = {
+        d: _read_step(spark, os.path.join(lake_dir, d), schema)
+        for d, schema in dep_schemas.items()
+    }
+    df = step.build(spark, inputs)
+    schema = df.schema.jsonValue()
+    tmp_dir = os.path.join(lake_dir, step.name) + "__building"
+    obs = Observation()
+    df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+        "overwrite"
+    ).parquet(tmp_dir)
+    rows = int(obs.get["rows"])
+    with open(os.path.join(tmp_dir, "_meta.json"), "w") as f:
+        json.dump({"signature": sig, "rows": rows, "schema": schema}, f)
+    return schema, rows
+
+
+def _promote(out_dir: str) -> None:
+    """Rename-aside swap of ``out_dir + "__building"`` into ``out_dir``
+    (never rmtree-the-live-then-rename: a crash between those left
+    NEITHER old nor new — ADVICE r11)."""
+    retired = out_dir + "__retired"
+    if os.path.exists(out_dir):
+        os.rename(out_dir, retired)
+    os.rename(out_dir + "__building", out_dir)
+    shutil.rmtree(retired, ignore_errors=True)
+
+
 def run_pipeline(
     spark: SparkSession,
     steps: Sequence[Step],
     lake_dir: str,
 ) -> dict:
     """Materialize the DAG into ``lake_dir``; return the run manifest
-    {step: {action, signature, rows?}} (rows recorded on build only —
-    skipped steps are not re-counted, that's the point). Bookkeeping
-    adds no Spark job to a build: ``rows`` is observed on the step's
-    write, and deps are read with the schema their ``_meta.json``
-    records."""
+    {step: {action, signature, rows?}} in topo order (rows recorded on
+    build only — skipped steps are not re-counted, that's the point).
+    Bookkeeping adds no Spark job to a build: ``rows`` is observed on
+    the step's write, and deps are read with the schema their
+    ``_meta.json`` records. Ready dirty steps build concurrently; see
+    the module docstring for the plan/run phases and failure rules."""
     os.makedirs(lake_dir, exist_ok=True)
+    order = _topo(steps)
     sigs: dict[str, str] = {}
     schemas: dict[str, dict | None] = {}
     manifest: dict[str, dict] = {}
-    for step in _topo(steps):
-        h = hashlib.sha256()
-        h.update(f"v={step.version};".encode())
-        for d in step.deps:
-            h.update(f"dep={d}:{sigs[d]};".encode())
-        for src in step.sources:
-            h.update(f"src={_source_fingerprint(src)};".encode())
-        sig = h.hexdigest()
-        sigs[step.name] = sig
-
+    dirty: dict[str, Step] = {}
+    for step in order:
+        sigs[step.name] = sig = _signature(step, sigs)
         out_dir = os.path.join(lake_dir, step.name)
         # sweep swap debris a previous crash may have stranded (the
         # live dir, if present, is always the authoritative one; a
@@ -171,36 +235,53 @@ def run_pipeline(
         if meta.get("signature") == sig:
             schemas[step.name] = meta.get("schema")
             manifest[step.name] = {"action": "skipped", "signature": sig}
-            continue
+        else:
+            dirty[step.name] = step
 
-        inputs = {
-            d: _read_step(spark, os.path.join(lake_dir, d), schemas[d])
-            for d in step.deps
-        }
-        df = step.build(spark, inputs)
-        schema = df.schema.jsonValue()
-        tmp_dir = out_dir + "__building"
-        obs = Observation()
-        df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
-            "overwrite"
-        ).parquet(tmp_dir)
-        rows = int(obs.get["rows"])
-        with open(os.path.join(tmp_dir, "_meta.json"), "w") as f:
-            json.dump({"signature": sig, "rows": rows, "schema": schema}, f)
-        # rename-aside promote (never rmtree-the-live-then-rename: a
-        # crash between those left NEITHER old nor new — ADVICE r11).
-        retired = out_dir + "__retired"
-        if os.path.exists(out_dir):
-            os.rename(out_dir, retired)
-        os.rename(tmp_dir, out_dir)
-        shutil.rmtree(retired, ignore_errors=True)
-        schemas[step.name] = schema
-        manifest[step.name] = {
-            "action": "built",
-            "signature": sig,
-            "rows": rows,
-        }
-    return manifest
+    # dirty step -> its deps still to build (topo order kept)
+    waiting = {
+        n: {d for d in s.deps if d in dirty} for n, s in dirty.items()
+    }
+    running: dict[Future, str] = {}
+    error: BaseException | None = None
+    with ThreadPoolExecutor(max_workers=max(len(dirty), 1)) as pool:
+        while True:
+            if error is None:
+                for name in [n for n, left in waiting.items() if not left]:
+                    del waiting[name]
+                    step = dirty[name]
+                    # a wrapper per submit: each clones the caller's
+                    # local properties, so a step's setJobGroup stays
+                    # its own
+                    target = inheritable_thread_target(spark)(_build_step)
+                    dep_schemas = {d: schemas[d] for d in step.deps}
+                    running[
+                        pool.submit(
+                            target, spark, step, lake_dir, sigs[name], dep_schemas
+                        )
+                    ] = name
+            if not running:
+                break
+            done, _ = wait(running, return_when=FIRST_COMPLETED)
+            for fut in done:
+                name = running.pop(fut)
+                try:
+                    schema, rows = fut.result()
+                except BaseException as e:  # re-raised once in-flight steps land
+                    error = error or e
+                    continue
+                _promote(os.path.join(lake_dir, name))
+                schemas[name] = schema
+                manifest[name] = {
+                    "action": "built",
+                    "signature": sigs[name],
+                    "rows": rows,
+                }
+                for left in waiting.values():
+                    left.discard(name)
+    if error is not None:
+        raise error
+    return {s.name: manifest[s.name] for s in order}
 
 
 def run_partitioned_step(

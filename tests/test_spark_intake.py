@@ -142,3 +142,22 @@ def test_parse_failure_classified_by_condition_not_message():
 
     assert _is_parse_failure(Wrapped("Task failed while writing rows"))
     assert not _is_parse_failure(OSError("No space left on device"))
+
+
+def test_ingest_directory_jobs_keep_caller_job_group(spark, tmp_path):
+    """The file pool carries the caller's job group onto its threads:
+    every file's normalize jobs are found under that group."""
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    for i in range(3):
+        write(landing / f"part{i}.csv", f"a,b\n{i},x\n{i + 1},y\n".encode())
+    sc = spark.sparkContext
+    group = f"intake-job-group-{tmp_path.name}"
+    sc.setJobGroup(group, "")
+    try:
+        audits, _ = ingest_directory(spark, str(landing), str(tmp_path / "out"), CFG)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert all(a.acceptable for a in audits) and len(audits) == 3
+    # at least one write job per file
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 3
