@@ -36,106 +36,12 @@ without any global sort.
 
 from __future__ import annotations
 
-import threading
-
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from free_etl_spark import cache
+
 _INTERNAL = ("__pid", "__lrn", "__o_rn")
-
-# (session, tag, plan-semantic-hash) -> persisted range-partitioned
-# relation. The persist is CORRECTNESS, not tuning: the
-# partitioned+pid relation is referenced by two plan branches (the
-# local windows and the per-partition totals), and without a shared
-# materialization Catalyst prunes each branch differently, the two
-# range exchanges stop being reusable, and each samples ITS OWN
-# boundaries — the offsets then describe a different partitioning
-# than the local prefix sums and the result is nondeterministically
-# wrong (observed at sf0.01: NTILE off by one near quartile
-# boundaries). The CacheManager replaces both canonically-equal
-# subtrees with the same InMemoryRelation, so boundaries are sampled
-# exactly once per execution.
-#
-# Keying by the analyzed plan's semanticHash means re-constructing
-# the SAME query returns the same persisted relation — no unpersist
-# happens, so a still-live DataFrame handle from an earlier
-# construction keeps its materialization (an eager unpersist here
-# would silently strip the persist out from under that handle and
-# reintroduce the boundary-resampling hazard on its next execution).
-# When a tag's plan genuinely changes (different sf dir / partition
-# count), the superseded entry is retired but its unpersist is
-# deferred one generation, giving in-flight handles of the previous
-# construction a grace window. Bound: ≤1 live + ≤1 retired persisted
-# relation per (session, tag). All mutation is under _LOCK — intake
-# and soak drive queries from driver-side thread pools.
-_PART_CACHE: dict[tuple, DataFrame] = {}
-_RETIRED: dict[tuple, list[DataFrame]] = {}
-_LOCK = threading.Lock()
-
-
-def clear_prefix_cache(session=None) -> None:
-    """Invalidate the persisted range-partitioned relations (all
-    sessions, or one). REQUIRED before re-running an ``ordered_prefix``
-    query whose INPUT FILES changed in-session: the cache key is the
-    plan's semanticHash, which is path-based — a rewritten table at
-    the same path hashes identically and would silently serve stale
-    rows. All standing callers read immutable bench tables, so the
-    contract is: ordered_prefix inputs are immutable for the session
-    unless the caller invalidates here first."""
-    with _LOCK:
-        keys = [k for k in _PART_CACHE if session is None or k[0] is session]
-        for k in keys:
-            try:
-                _PART_CACHE.pop(k).unpersist()
-            except Exception:
-                pass
-        rkeys = [k for k in _RETIRED if session is None or k[0] is session]
-        for k in rkeys:
-            for df in _RETIRED.pop(k):
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass
-
-
-def _sem_hash(df: DataFrame) -> int | None:
-    try:
-        return df._jdf.queryExecution().analyzed().semanticHash()
-    except Exception:  # non-JVM session / API drift — never cache-hit
-        return None
-
-
-def _persist_part(df: DataFrame, tag: str) -> DataFrame:
-    sess = df.sparkSession
-    h = _sem_hash(df)
-    key = (sess, tag, h)
-    with _LOCK:
-        if h is not None:
-            hit = _PART_CACHE.get(key)
-            if hit is not None:
-                return hit
-        # h None (non-JVM session / API drift) disables cache HITS, so
-        # every None-keyed construction must also treat the previous
-        # (sess, tag, None) entry as superseded — otherwise it would be
-        # overwritten below without retirement and its persisted blocks
-        # would leak unboundedly on that fallback path.
-        stale = [
-            k
-            for k in _PART_CACHE
-            if k[0] is sess and k[1] == tag and (k != key or h is None)
-        ]
-        retired = _RETIRED.setdefault((sess, tag), [])
-        for k in stale:
-            retired.append(_PART_CACHE.pop(k))
-        while len(retired) > 1:
-            try:
-                retired.pop(0).unpersist()
-            except Exception:
-                pass
-        out = df.persist(StorageLevel.MEMORY_AND_DISK)
-        _PART_CACHE[key] = out
-    return out
 
 
 def ordered_prefix(
@@ -155,11 +61,8 @@ def ordered_prefix(
     order      total order (include a unique tie-breaker!); Columns
                may carry ``.desc()``.
     cache_tag  stable identifier for the persisted partitioned
-               relation (see _PART_CACHE) — one live cache entry per
-               tag per session. Inputs must be immutable for the
-               session (the cache key is the plan's semanticHash,
-               blind to file rewrites at the same path); call
-               ``clear_prefix_cache`` after mutating an input.
+               relation (a ``cache.by_plan`` slot) — one live cache
+               entry per tag per session.
     sums       out_alias -> column: inclusive running sum in that
                order (``SUM(col) OVER (ORDER BY ... ROWS UNBOUNDED
                PRECEDING)``).
@@ -184,7 +87,14 @@ def ordered_prefix(
             )
         except Exception:
             partitions = 32
-    part = _persist_part(
+    # The persist is correctness, not tuning: the local windows and the
+    # per-partition totals both read this relation, and without a shared
+    # materialization Catalyst prunes each branch differently, so each
+    # range exchange samples its own boundaries and the offsets describe
+    # another partitioning than the local sums. The CacheManager swaps
+    # both subtrees for one InMemoryRelation, so boundaries are sampled
+    # once per execution.
+    part = cache.by_plan(
         df.repartitionByRange(partitions, *order).withColumn(
             "__pid", F.spark_partition_id()
         ),
@@ -328,7 +238,7 @@ def global_ntile_boundaries(
     # cached row — where global_ntile's warm path still pays a window
     # pass — and the cache holds k-1 tuples instead of a full copy of
     # the scored relation per metric.
-    bnd = _persist_part(bnd, f"{cache_tag}__bnd")
+    bnd = cache.by_plan(bnd, f"{cache_tag}__bnd")
 
     def _after(b, i: int = 0) -> Column:
         name, desc = keys[i]

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from free_etl_spark import cache
 from free_etl_spark.registry import query
 from free_etl_spark.tables import load_table
 
@@ -62,73 +63,6 @@ _SHC_SQL = f"""
 """
 
 
-import weakref
-
-# one persisted DataFrame per (live session, relation tag, sf_dir):
-# five registered queries consume the identical shingle relation (and
-# minhash reuses its banded signatures on both sides of a self-join),
-# and a correctness sweep runs them back-to-back — without this cache
-# each query would rebuild (and re-persist) from scratch. Weak-keyed
-# so a stopped session's entries disappear with it.
-_RELATION_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[tuple, DataFrame]]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
-def _cached_relation(
-    spark: SparkSession,
-    sf_dir: str,
-    tag: str,
-    build,
-    src_table: "str | list[str]" = "documents.parquet",
-) -> DataFrame:
-    """Memoize ``build()`` persisted MEMORY_AND_DISK per (session, tag,
-    sf_dir). The cache key includes EVERY source file's mtime (the
-    tables the relation derives from — documents for the shingle
-    family, events for graph edges, a list for joins like
-    orders⋈lineitem): a regenerated corpus within the same session
-    must rebuild even when only one join side changed (and the stale
-    persisted relation is dropped, not leaked)."""
-    import os
-
-    from pyspark import StorageLevel
-
-    tables = [src_table] if isinstance(src_table, str) else src_table
-    mtimes = []
-    for t in tables:
-        try:
-            mtimes.append(os.path.getmtime(os.path.join(sf_dir, t)))
-        except OSError:
-            mtimes.append(None)
-    key = (tag, sf_dir, tuple(mtimes))
-    per_session = _RELATION_CACHE.setdefault(spark, {})
-    cached = per_session.get(key)
-    if cached is not None:
-        return cached
-    for old_key in [k for k in per_session if k[:2] == (tag, sf_dir)]:
-        per_session.pop(old_key).unpersist()
-    df = build().persist(StorageLevel.MEMORY_AND_DISK)
-    per_session[key] = df
-    return df
-
-
-def clear_relation_cache(spark: SparkSession) -> None:
-    """Unpersist and forget every session-cached relation. Test hook
-    for plan-shape audits (a cached relation's printed plan embeds its
-    child plan, inflating node counts in text-based audits) and an
-    escape hatch for long-lived sessions. Also clears the BPE fit
-    cache (queries/text.py), the one other session-keyed relation
-    store, so this hook covers every cache (ADVICE r10)."""
-    per_session = _RELATION_CACHE.get(spark)
-    if per_session:
-        for df in per_session.values():
-            df.unpersist()
-        per_session.clear()
-    from free_etl_spark.queries.text import clear_bpe_fit_cache
-
-    clear_bpe_fit_cache(spark)
-
-
 def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct word-n-gram shingles per doc: doc_id, sh.
 
@@ -164,7 +98,7 @@ def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("sh"),
         )
 
-    return _cached_relation(spark, sf_dir, "sh", build)
+    return cache.relation(spark, sf_dir, "sh", build)
 
 
 def _jaccard_pairs(shingles: DataFrame) -> DataFrame:
@@ -260,7 +194,7 @@ def _capped_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("inter"))
         )
 
-    return _cached_relation(spark, sf_dir, "capped_pairs", build)
+    return cache.relation(spark, sf_dir, "capped_pairs", build)
 
 
 @query(
@@ -336,7 +270,7 @@ def _minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
         return _banded_minhash(_shingles(spark, sf_dir))
 
-    return _cached_relation(spark, sf_dir, "minhash_bands", build)
+    return cache.relation(spark, sf_dir, "minhash_bands", build)
 
 
 def _banded_minhash(sh: DataFrame) -> DataFrame:
@@ -528,7 +462,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id", simhash.cast("long").alias("simhash64")
         )
 
-    return _cached_relation(spark, sf_dir, "simhash_sig", build)
+    return cache.relation(spark, sf_dir, "simhash_sig", build)
 
 
 _COS_T = 0.45
@@ -612,7 +546,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("cosine") >= _COS_T
         )
 
-    return _cached_relation(
+    return cache.relation(
         spark, sf_dir, "emb_cos_pairs", build, src_table="embeddings.parquet"
     )
 
@@ -855,7 +789,7 @@ def dedup_pipeline_keep_set(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("jaccard") >= _JACCARD_T
         ).select("doc_a", "doc_b")
 
-    pairs = _cached_relation(spark, sf_dir, "pipeline_pairs", build_pairs)
+    pairs = cache.relation(spark, sf_dir, "pipeline_pairs", build_pairs)
     from free_etl_spark.operators.components import connected_components
 
     comp = connected_components(
@@ -1815,7 +1749,7 @@ def quality_dedup_effect_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("jaccard") >= _JACCARD_T
         ).select("doc_a", "doc_b")
 
-    pairs = _cached_relation(spark, sf_dir, "pipeline_pairs", build_pairs)
+    pairs = cache.relation(spark, sf_dir, "pipeline_pairs", build_pairs)
     comp = connected_components(
         keepers, pairs, node_col="doc_id", src_col="doc_a", dst_col="doc_b"
     )
@@ -1989,7 +1923,7 @@ def _chat_conversations(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).otherwise(F.array().cast("array<string>"))
         return staged.select("doc_id", F.concat(opening, own).alias("turns"))
 
-    return _cached_relation(spark, sf_dir, "chat_conversations", build)
+    return cache.relation(spark, sf_dir, "chat_conversations", build)
 
 
 def _chat_turn_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2032,7 +1966,7 @@ def _chat_turn_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id", "sh"
         )
 
-    return _cached_relation(spark, sf_dir, "chat_turn_sh", build)
+    return cache.relation(spark, sf_dir, "chat_turn_sh", build)
 
 
 @query(
@@ -2078,7 +2012,7 @@ def dedup_chat_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs, and the scripted full-dup plant arrives in clusters of 2
     so pair volume stays linear at any corpus size."""
     sh = _chat_turn_shingles(spark, sf_dir)
-    bands = _cached_relation(
+    bands = cache.relation(
         spark, sf_dir, "chat_turn_bands", lambda: _banded_minhash(sh)
     )
     a, b = bands.alias("a"), bands.alias("b")
@@ -2217,7 +2151,7 @@ def quality_dedup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("jaccard") >= _JACCARD_T
         ).select("doc_a", "doc_b")
 
-    pairs = _cached_relation(spark, sf_dir, "pipeline_pairs", build_pairs)
+    pairs = cache.relation(spark, sf_dir, "pipeline_pairs", build_pairs)
     comp = connected_components(
         keepers, pairs, node_col="doc_id", src_col="doc_a", dst_col="doc_b"
     )

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from free_etl_spark import cache
 from free_etl_spark.registry import query
 from free_etl_spark.tables import load_table
 
@@ -30,7 +31,6 @@ def transition_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     per user (ordered by ts, event_id for a total order). Persisted
     per (session, corpus mtime) via the shared relation cache — the
     rank loop takes several actions over the same distilled edges."""
-    from free_etl_spark.queries.dedup import _cached_relation
 
     def build() -> DataFrame:
         ev = load_table(spark, sf_dir, "events").select(
@@ -45,7 +45,7 @@ def transition_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("double").alias("w")
         )
 
-    return _cached_relation(
+    return cache.relation(
         spark, sf_dir, "graph_edges", build, src_table="events.parquet"
     )
 
@@ -334,14 +334,13 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     vertex keys plus the lexicographic (hi_d, hi) inequality, which
     encodes the identical order the oracle's ROW_NUMBER rank does.
     Nodes in no triangle report 0 via the left join."""
-    from free_etl_spark.queries.dedup import _cached_relation
 
     und = undirected_edges(spark, sf_dir)
     deg = node_degrees(und)
     # the oriented edge list is referenced three times by the wedge
     # self-join — persist it (edge-set-sized) so the rank window and
     # upstream distillation run once, not three times
-    er = _cached_relation(
+    er = cache.relation(
         spark,
         sf_dir,
         "graph_er",
@@ -494,7 +493,6 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     as the PageRank iterations above; label relations stay node-set-
     sized and distributed. Isolated nodes (none here) keep their own
     label via the final left join."""
-    from free_etl_spark.queries.dedup import _cached_relation
 
     und = undirected_edges(spark, sf_dir)
 
@@ -508,7 +506,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the neighbor relation drives every propagation round — persist
     # it (edge-set-sized) so each round joins the cached relation
     # instead of re-distilling the event log
-    nb = _cached_relation(
+    nb = cache.relation(
         spark, sf_dir, "graph_nb", build_nb, src_table="events.parquet"
     )
     return label_propagation_rounds(nb, rounds=2).select(
@@ -641,7 +639,6 @@ def user_copresence_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge relation the algorithms below consume is orders of magnitude
     smaller than the event log. Persisted via the shared relation
     cache (k-core takes several actions over it)."""
-    from free_etl_spark.queries.dedup import _cached_relation
 
     def build() -> DataFrame:
         ev = load_table(spark, sf_dir, "events")
@@ -651,7 +648,7 @@ def user_copresence_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).distinct()
         return _capped_pairs(_capped_active(uh, "yyyy-MM-dd HH", _HOUR_CAP))
 
-    return _cached_relation(
+    return cache.relation(
         spark, sf_dir, "user_edges", build, src_table="events.parquet"
     )
 
@@ -1034,7 +1031,6 @@ def user_interaction_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     interaction rather than mere coexistence, capped per bucket at
     _MINUTE_CAP (density axis — see _capped_active). Persisted like
     its hour-grain sibling."""
-    from free_etl_spark.queries.dedup import _cached_relation
 
     def build() -> DataFrame:
         ev = load_table(spark, sf_dir, "events")
@@ -1046,7 +1042,7 @@ def user_interaction_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             _capped_active(um, "yyyy-MM-dd HH:mm", _MINUTE_CAP)
         )
 
-    return _cached_relation(
+    return cache.relation(
         spark, sf_dir, "user_min_edges", build, src_table="events.parquet"
     )
 
@@ -1098,7 +1094,6 @@ def graph_clustering_coefficient(
     before the re-grain, 2 orders of magnitude of wasted wedges).
     The coefficient itself is an exact integer ratio FLOOR-6ed — no
     FP boundary. Degrees and triangles join node-keyed."""
-    from free_etl_spark.queries.dedup import _cached_relation
 
     edges = user_interaction_edges(spark, sf_dir)
     und = edges.select(F.col("ua").alias("a"), F.col("ub").alias("b"))
@@ -1106,7 +1101,7 @@ def graph_clustering_coefficient(
     # the oriented edge list feeds the wedge self-join three times —
     # persist it (edge-set-sized) exactly like graph_triangle_count,
     # or the orientation joins replay per branch
-    er = _cached_relation(
+    er = cache.relation(
         spark,
         sf_dir,
         "user_min_er",

@@ -24,6 +24,7 @@ from free_etl_spark.operators.multimodal import (
     sample_frames,
     with_media_kind,
 )
+from free_etl_spark import cache
 from free_etl_spark.registry import query
 from free_etl_spark.tables import load_table
 
@@ -219,7 +220,6 @@ def multimodal_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     subtree twice — at real image sizes the decode IS the job's cost,
     so hashing every image twice would double it."""
     from free_etl_spark.operators.multimodal import dhash_images
-    from free_etl_spark.queries.dedup import _cached_relation
 
     def build() -> DataFrame:
         docs = load_table(spark, sf_dir, "documents")
@@ -237,7 +237,7 @@ def multimodal_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("path").cast("long").alias("doc_id"), "dhash64"
         )
 
-    return _cached_relation(spark, sf_dir, "phash_sig", build)
+    return cache.relation(spark, sf_dir, "phash_sig", build)
 
 
 @query(
@@ -360,12 +360,11 @@ def _pcm_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     serves every consumer and every repeat invocation. The decoded
     relation is (doc_id, ints) — far smaller than the corpus text it
     derives from."""
-    from free_etl_spark.queries.dedup import _cached_relation
 
     def build() -> DataFrame:
         return _pcm_frames_build(load_table(spark, sf_dir, "documents"))
 
-    return _cached_relation(spark, sf_dir, "pcm_frames", build)
+    return cache.relation(spark, sf_dir, "pcm_frames", build)
 
 
 def _pcm_frames_build(docs: DataFrame) -> DataFrame:
@@ -910,7 +909,6 @@ def multimodal_frame_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     by df-cap x matching frames, never videos². The per-video argmax
     is one window over the (sparse) match relation."""
     from free_etl_spark.operators.multimodal import dhash_images, sample_frames
-    from free_etl_spark.queries.dedup import _cached_relation
 
     def build_sig() -> DataFrame:
         docs = load_table(spark, sf_dir, "documents")
@@ -959,7 +957,7 @@ def multimodal_frame_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persisted per (session, corpus): the decode subtree is referenced
     # by the DF-cap aggregate AND both self-join sides — at real image
     # sizes the decode IS the cost, so planning it 4x would 4x the job
-    sig = _cached_relation(spark, sf_dir, "frame_phash_sig", build_sig)
+    sig = cache.relation(spark, sf_dir, "frame_phash_sig", build_sig)
     keep = sig.groupBy("h").agg(F.count(F.lit(1)).alias("df")).filter(
         F.col("df") <= _FRAME_DF_CAP
     )
@@ -1181,14 +1179,13 @@ def _audio_fp_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline and its measured shape rules; the per-doc window cap
     bounds work per row at any corpus scale (the 'intro fingerprint'
     every audio matcher uses)."""
-    from free_etl_spark.queries.dedup import _cached_relation
 
     def build() -> DataFrame:
         return _afp_sig_rows(
             spark, _afp_payload(load_table(spark, sf_dir, "documents"))
         )
 
-    return _cached_relation(spark, sf_dir, "audio_fp_sig", build)
+    return cache.relation(spark, sf_dir, "audio_fp_sig", build)
 
 
 def _audio_fp_sigs_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1200,7 +1197,6 @@ def _audio_fp_sigs_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     each trigger re-ran the groupBy(sig) cap + join over the full sig
     relation (guide §3: pin the small static relation once; the
     per-trigger static side is now a cache read)."""
-    from free_etl_spark.queries.dedup import _cached_relation
 
     def build() -> DataFrame:
         sd = _audio_fp_sigs(spark, sf_dir)
@@ -1211,7 +1207,7 @@ def _audio_fp_sigs_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return sd.join(F.broadcast(keep.select("sig")), "sig")
 
-    return _cached_relation(spark, sf_dir, "audio_fp_sig_capped", build)
+    return cache.relation(spark, sf_dir, "audio_fp_sig_capped", build)
 
 
 @query(

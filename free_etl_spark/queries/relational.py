@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from free_etl_spark import cache
 from free_etl_spark.registry import query
 from free_etl_spark.tables import load_table
 
@@ -727,12 +728,9 @@ def orders_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("o_totalprice").alias("monetary"),
         )
     )
-    from free_etl_spark.operators.prefix import (
-        _persist_part,
-        global_ntile_boundaries,
-    )
+    from free_etl_spark.operators.prefix import global_ntile_boundaries
 
-    cust = _persist_part(cust, "rfm_cust")
+    cust = cache.by_plan(cust, "rfm_cust")
     scored = cust
     for alias, vcol, desc in (
         ("r", "recency_days", False),

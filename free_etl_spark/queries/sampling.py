@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from free_etl_spark import cache
 from free_etl_spark.registry import query
 from free_etl_spark.tables import load_table
 
@@ -1374,7 +1375,6 @@ def sample_dedup_aware_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     clustering are the already-audited shared relations."""
     from free_etl_spark.operators.components import connected_components
     from free_etl_spark.queries.dedup import (
-        _cached_relation,
         _jaccard_pairs,
         _shingles,
     )
@@ -1396,7 +1396,7 @@ def sample_dedup_aware_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("jaccard") >= _JACCARD_T_S
         ).select("doc_a", "doc_b")
 
-    pairs = _cached_relation(spark, sf_dir, "pipeline_pairs", build_pairs)
+    pairs = cache.relation(spark, sf_dir, "pipeline_pairs", build_pairs)
     comp = connected_components(
         keepers, pairs, node_col="doc_id", src_col="doc_a", dst_col="doc_b"
     )

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from free_etl_spark import cache
 from free_etl_spark.registry import query
 from free_etl_spark.tables import load_table
 
@@ -307,7 +308,6 @@ def _ivf_nearest4(spark: SparkSession, sf_dir: str) -> DataFrame:
         probe_dim,
         scaled_centroid_k,
     )
-    from free_etl_spark.queries.dedup import _cached_relation
 
     def build() -> DataFrame:
         emb = load_table(spark, sf_dir, "embeddings").select(
@@ -322,7 +322,7 @@ def _ivf_nearest4(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("vec_id", "cent_id", "d2", "rn")
         )
 
-    return _cached_relation(
+    return cache.relation(
         spark, sf_dir, "ivf_nearest4", build, src_table="embeddings.parquet"
     )
 
@@ -3100,7 +3100,7 @@ def _ivfpq_store(spark: SparkSession, sf_dir: str) -> str:
     (sim_ivfpq_adc_search, streaming_ann_probe) read codes and raw
     vectors back from THIS on-disk layout, so their oracles value-gate
     the persisted codes, not a per-query recomputation. Rebuilds when
-    the corpus file changes (the _cached_relation mtime discipline)."""
+    the corpus file changes (the session cache's mtime rule)."""
     import json
     import os
 

@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from free_etl_spark import cache
 from free_etl_spark.registry import query
 from free_etl_spark.tables import load_table
 
@@ -2607,64 +2608,18 @@ def _bpe_encode_oracle(rounds: int) -> str:
 _BPE_TRAIN_ROUNDS = 6
 
 
-_BPE_FIT_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = None  # type: ignore[assignment]
-
-
-def _release_checkpoint(df: DataFrame) -> None:
-    """Best-effort release of a localCheckpoint'd DataFrame's cached
-    RDD blocks (ADVICE r10): the checkpointed data lives as RDD blocks
-    the DataFrame-level unpersist() never touches, so an evicted vocab
-    relation would otherwise pin executor storage until driver GC. The
-    checkpoint RDD is reachable through the plan's LogicalRDD node;
-    anything unexpected (plan shape, py4j) degrades to the old
-    GC-eventually behavior, never to an error."""
-    try:
-        df._jdf.queryExecution().logical().rdd().unpersist(False)  # noqa: SLF001
-    except Exception:
-        pass
-
-
-def clear_bpe_fit_cache(spark: SparkSession) -> None:
-    """Release and forget every session-cached BPE fit — invoked by
-    dedup.clear_relation_cache so the soak/test hook covers this cache
-    too (ADVICE r10)."""
-    if _BPE_FIT_CACHE is None:
-        return
-    per_session = _BPE_FIT_CACHE.get(spark)
-    if per_session:
-        for _merges, vocab in per_session.values():
-            _release_checkpoint(vocab)
-        per_session.clear()
-
-
 def _bpe_fit(
     spark: SparkSession, sf_dir: str, rounds: int
 ) -> tuple[list[tuple], DataFrame]:
-    """Session-memoized BPE trainer: returns (merge table rows,
-    fully-merged vocabulary relation), computed once per (session,
-    corpus, rounds). THREE queries consume the identical fit
-    (trainer, encoder, per-lang fertility) and each run costs ~1.8 s
-    of iterative folds at sf0.1 — the same shared-relation rule as
-    _cached_relation (keyed on the source mtime so a regenerated
-    corpus refits; the vocab relation is an eager localCheckpoint, so
-    reuse across queries is safe and leaks LESS than re-fitting)."""
-    import os
-    import weakref
-
-    global _BPE_FIT_CACHE
-    if _BPE_FIT_CACHE is None:
-        _BPE_FIT_CACHE = weakref.WeakKeyDictionary()
-    try:
-        mtime = os.path.getmtime(os.path.join(sf_dir, "documents.parquet"))
-    except OSError:
-        mtime = None
-    key = (sf_dir, rounds, mtime)
-    per_session = _BPE_FIT_CACHE.setdefault(spark, {})
-    if key not in per_session:
-        for old in [k for k in per_session if k[:2] == (sf_dir, rounds)]:
-            _release_checkpoint(per_session.pop(old)[1])
-        per_session[key] = _bpe_fit_impl(spark, sf_dir, rounds)
-    return per_session[key]
+    """Session-cached BPE trainer: returns (merge table rows, fully-merged
+    vocabulary relation), fitted once per (session, corpus, rounds)
+    while documents.parquet is unchanged. THREE queries consume the
+    identical fit (trainer, encoder, per-lang fertility) and each fit
+    costs ~1.8 s of iterative folds at sf0.1; the vocab relation is an
+    eager localCheckpoint, so reuse across queries is safe and leaks
+    LESS than re-fitting."""
+    fit = lambda: _bpe_fit_impl(spark, sf_dir, rounds)  # noqa: E731
+    return cache.memo(spark, sf_dir, f"bpe_fit_r{rounds}", fit)
 
 
 def _bpe_fit_impl(
@@ -2736,7 +2691,7 @@ def _bpe_fit_impl(
         # the new checkpoint fully supersedes the previous round's —
         # release its blocks NOW instead of orphaning one generation
         # per round until driver GC (ADVICE r10)
-        _release_checkpoint(prev)
+        cache.release(prev)
     return merges, cur
 
 

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from free_etl_spark import cache
 from free_etl_spark.registry import query
 from free_etl_spark.tables import load_table
 
@@ -909,7 +910,6 @@ def bought_baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
     including the three references inside a single also_bought plan
     (cap computation + both self-join sides) — reads the persisted
     relation."""
-    from free_etl_spark.queries.dedup import _cached_relation
 
     def build() -> DataFrame:
         orders = load_table(spark, sf_dir, "orders")
@@ -925,7 +925,7 @@ def bought_baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
         )
 
-    return _cached_relation(
+    return cache.relation(
         spark,
         sf_dir,
         "bought_baskets",
@@ -1117,7 +1117,6 @@ def orders_market_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-basket relation feeds FOUR consumers (order count, item
     supports, both self-join sides) — persisted via the shared
     session cache like its customer-keyed sibling bought_baskets."""
-    from free_etl_spark.queries.dedup import _cached_relation
 
     def build_baskets() -> DataFrame:
         li = load_table(spark, sf_dir, "lineitem")
@@ -1125,7 +1124,7 @@ def orders_market_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("l_orderkey").alias("ord"), F.col("l_partkey").alias("part")
         ).distinct()
 
-    b = _cached_relation(
+    b = cache.relation(
         spark, sf_dir, "order_baskets", build_baskets,
         src_table="lineitem.parquet",
     )

@@ -77,3 +77,37 @@ def test_no_stale_previous_count_anywhere():
         text = _read(rel)
         for pat in stale:
             assert not pat.search(text), f"{rel}: stale count {pat.pattern}"
+
+
+def test_session_cache_lives_only_in_cache_py():
+    """free_etl_spark/cache.py is the one home of session-cached
+    relations: no other module may grow a module-level
+    WeakKeyDictionary or ``*_CACHE`` store of its own. sqlrun._LAST_SF
+    is exempt: it remembers a view registration, not a relation."""
+    import ast
+
+    root = os.path.join(HERE, "free_etl_spark")
+    found = []
+    for dirpath, _dirs, files in os.walk(root):
+        for fn in files:
+            path = os.path.join(dirpath, fn)
+            rel = os.path.relpath(path, HERE)
+            if not fn.endswith(".py") or rel == "free_etl_spark/cache.py":
+                continue
+            with open(path) as f:
+                tree = ast.parse(f.read())
+            for node in tree.body:
+                if isinstance(node, ast.Assign):
+                    targets = node.targets
+                elif isinstance(node, ast.AnnAssign):
+                    targets = [node.target]
+                else:
+                    continue
+                names = [t.id for t in targets if isinstance(t, ast.Name)]
+                if (rel, names) == ("free_etl_spark/sqlrun.py", ["_LAST_SF"]):
+                    continue
+                if any(n.endswith("_CACHE") for n in names) or (
+                    "WeakKeyDictionary" in ast.unparse(node)
+                ):
+                    found.append(f"{rel}:{node.lineno} {names}")
+    assert not found, f"session caches outside free_etl_spark/cache.py: {found}"

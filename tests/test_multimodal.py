@@ -93,7 +93,7 @@ def test_frame_phash_dedup_survives_multibyte_text(spark, tmp_path):
     import pyspark.sql.functions as F
 
     from free_etl_spark.queries import ORACLES, QUERIES
-    from free_etl_spark.queries.dedup import clear_relation_cache
+    from free_etl_spark import cache
 
     rows = []
     for d in range(40):
@@ -106,7 +106,7 @@ def test_frame_phash_dedup_survives_multibyte_text(spark, tmp_path):
     ).coalesce(1).write.mode("overwrite").parquet(
         str(tmp_path / "documents.parquet")
     )
-    clear_relation_cache(spark)  # don't ride a cached sig from SF_DIR
+    cache.clear(spark)  # don't ride a cached sig from SF_DIR
     try:
         got = (
             QUERIES["multimodal_frame_phash_dedup"](spark, str(tmp_path))
@@ -130,4 +130,4 @@ def test_frame_phash_dedup_survives_multibyte_text(spark, tmp_path):
         assert (got["best_match"].values == want["best_match"].values).all()
         assert (got["n_shared"].values == want["n_shared"].values).all()
     finally:
-        clear_relation_cache(spark)  # drop the crafted-corpus sig
+        cache.clear(spark)  # drop the crafted-corpus sig

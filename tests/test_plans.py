@@ -192,9 +192,9 @@ def test_near_dup_plans_have_no_cartesian_products(spark):
     # embeds its child plan text, so prior tests that populated the
     # relation cache (ann_quality's sim_ivf_topk run) would inflate
     # the text-based BNL count — clear the cache first.
-    from free_etl_spark.queries.dedup import clear_relation_cache
+    from free_etl_spark import cache
 
-    clear_relation_cache(spark)
+    cache.clear(spark)
     a = audit(spark, "dedup_embedding_cosine", SF_DIR)
     assert a["bnl_joins"] <= 2
 

@@ -157,7 +157,7 @@ def test_repeated_construction_is_stable_and_bounded(spark, scrambled):
     """Re-running the same prefix query must produce identical values
     (regression for the two-branch boundary-sampling bug) and must not
     accumulate cache entries (one live entry per tag)."""
-    from free_etl_spark.operators.prefix import _PART_CACHE
+    from free_etl_spark import cache
 
     vals = []
     for _ in range(3):
@@ -166,9 +166,8 @@ def test_repeated_construction_is_stable_and_bounded(spark, scrambled):
         )
         vals.append(tuple(df.orderBy("k").toPandas()["b"]))
     assert vals[0] == vals[1] == vals[2]
-    assert (
-        sum(1 for (_, tag, _h) in _PART_CACHE if tag == "test_stable") == 1
-    )
+    live, retired = cache._STORE[spark]["test_stable"]
+    assert live is not None and retired is None
 
 
 def test_persist_gate_plan_shape(spark, scrambled):
@@ -176,7 +175,7 @@ def test_persist_gate_plan_shape(spark, scrambled):
     both plan branches (local windows and per-partition totals) must
     read the SAME cached range-partitioned relation, so exactly one
     range exchange samples boundaries. If a refactor drops the
-    _persist_part persist, the cache scan disappears from the plan and
+    cache.by_plan persist, the cache scan disappears from the plan and
     each branch re-samples its own boundaries — the off-by-one NTILE
     bug observed at sf0.01. This pins the plan shape."""
     df = ordered_prefix(
@@ -201,33 +200,33 @@ def test_stale_handle_keeps_persist_one_generation(spark, scrambled):
     its materialization when the same tag is rebuilt: an identical
     rebuild reuses the same persisted relation (semantic-hash cache
     hit), and a changed plan defers the unpersist one generation."""
-    from free_etl_spark.operators.prefix import _persist_part
+    from free_etl_spark import cache
 
     base = scrambled.repartitionByRange(4, "k").withColumn(
         "__pid", F.spark_partition_id()
     )
-    first = _persist_part(base, "test_stale_handle")
-    # identical rebuild: same object back, still persisted
-    again = _persist_part(
+    first = cache.by_plan(base, "test_stale_handle")
+    # identical rebuild: same relation back, still persisted
+    again = cache.by_plan(
         scrambled.repartitionByRange(4, "k").withColumn(
             "__pid", F.spark_partition_id()
         ),
         "test_stale_handle",
     )
-    assert again is first
+    assert again._jdf is first._jdf
     assert first.storageLevel.useMemory
     # changed plan (different partition count): first is retired but
     # NOT yet unpersisted — a live handle may still execute it
-    second = _persist_part(
+    second = cache.by_plan(
         scrambled.repartitionByRange(8, "k").withColumn(
             "__pid", F.spark_partition_id()
         ),
         "test_stale_handle",
     )
-    assert second is not first
+    assert second._jdf is not first._jdf
     assert first.storageLevel.useMemory
     # a second distinct rebuild finally evicts the oldest generation
-    _persist_part(
+    cache.by_plan(
         scrambled.repartitionByRange(16, "k").withColumn(
             "__pid", F.spark_partition_id()
         ),
@@ -264,40 +263,39 @@ def test_ordered_prefix_exclusive_max_matches_global_window(spark, scrambled):
 def test_none_hash_fallback_retires_previous_entry(spark, scrambled, monkeypatch):
     """When semanticHash is unavailable (non-JVM session / API drift)
     cache HITS are disabled — but repeated constructions must still
-    retire the previous (sess, tag, None) entry instead of silently
+    retire the previous None-keyed entry instead of silently
     overwriting it, or persisted blocks leak unboundedly on that
     fallback path (the documented bound is ≤1 live + ≤1 retired per
     (session, tag))."""
-    import free_etl_spark.operators.prefix as P
+    from free_etl_spark import cache
 
-    monkeypatch.setattr(P, "_sem_hash", lambda df: None)
+    monkeypatch.setattr(cache, "_sem_hash", lambda df: None)
     frames = []
     for n in (4, 8, 16):
         frames.append(
-            P._persist_part(
+            cache.by_plan(
                 scrambled.repartitionByRange(n, "k").withColumn(
                     "__pid", F.spark_partition_id()
                 ),
                 "test_none_hash",
             )
         )
-    live = [k for k in P._PART_CACHE if k[1] == "test_none_hash"]
-    assert len(live) == 1
-    assert len(P._RETIRED.get((spark, "test_none_hash"), [])) <= 1
+    live, retired = cache._STORE[spark]["test_none_hash"]
+    assert live is not None and live.value is frames[2]._jdf
+    assert retired is not None and retired.value is frames[1]._jdf
     # oldest generation actually unpersisted, newest still live
     assert not frames[0].storageLevel.useMemory
     assert frames[2].storageLevel.useMemory
 
 
 def test_clear_prefix_cache_invalidates_and_unpersists(spark, scrambled):
-    """The explicit invalidation hook for in-session input mutation:
-    after clear_prefix_cache the tag's entries are gone, their blocks
-    unpersisted, and a rebuild persists a FRESH relation (no stale
-    semantic-hash hit)."""
-    import free_etl_spark.operators.prefix as P
+    """The session hook cache.clear: afterwards the tag's entries are
+    gone, their blocks unpersisted, and a rebuild persists a FRESH
+    relation (no stale semantic-hash hit)."""
+    from free_etl_spark import cache
 
     def build():
-        return P._persist_part(
+        return cache.by_plan(
             scrambled.repartitionByRange(4, "k").withColumn(
                 "__pid", F.spark_partition_id()
             ),
@@ -306,9 +304,9 @@ def test_clear_prefix_cache_invalidates_and_unpersists(spark, scrambled):
 
     first = build()
     assert first.storageLevel.useMemory
-    P.clear_prefix_cache(spark)
-    assert not any(k[1] == "test_clear" for k in P._PART_CACHE)
+    cache.clear(spark)
+    assert "test_clear" not in cache._STORE[spark]
     assert not first.storageLevel.useMemory
     second = build()
-    assert second is not first
+    assert second._jdf is not first._jdf
     assert second.storageLevel.useMemory

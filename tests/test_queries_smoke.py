@@ -689,11 +689,9 @@ def test_abc_pareto_class_shares(spark):
 def test_bpe_fit_cache_releases_checkpoint_blocks(spark):
     """ADVICE r10: the BPE fit cache's vocab relation is an eager
     localCheckpoint whose RDD blocks DataFrame.unpersist never frees.
-    Both release paths must drop the blocks: eviction inside _bpe_fit
-    and the registry-wide dedup.clear_relation_cache hook (which now
-    covers this cache too)."""
-    import free_etl_spark.queries.text as textmod
-    from free_etl_spark.queries.dedup import clear_relation_cache
+    The session cache's release path (cache.clear, and the same
+    release on replacement) must drop the blocks."""
+    from free_etl_spark import cache
     from free_etl_spark.queries.text import _bpe_fit, _BPE_TRAIN_ROUNDS
 
     def stored_ids() -> set:
@@ -702,16 +700,16 @@ def test_bpe_fit_cache_releases_checkpoint_blocks(spark):
             for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
         }
 
-    clear_relation_cache(spark)  # start from a known-clean slate
+    cache.clear(spark)  # start from a known-clean slate
     before = stored_ids()
     _merges, vocab = _bpe_fit(spark, SF_DIR, _BPE_TRAIN_ROUNDS)
     assert vocab.count() > 0
     created = stored_ids() - before
     assert created, "fit should have checkpointed the vocab relation"
-    assert textmod._BPE_FIT_CACHE.get(spark)
+    assert cache._STORE[spark]
 
-    clear_relation_cache(spark)
-    assert not textmod._BPE_FIT_CACHE.get(spark)
+    cache.clear(spark)
+    assert not cache._STORE[spark]
     leaked = stored_ids() & created
     assert not leaked, f"vocab checkpoint blocks survived clear: {leaked}"
 
@@ -726,11 +724,11 @@ def test_chat_turn_dedup_is_role_aware(spark, tmp_path):
     dialogues."""
     import pyspark.sql.functions as F
 
+    from free_etl_spark import cache
     from free_etl_spark.queries import QUERIES
     from free_etl_spark.queries.dedup import (
         _CHAT_TURN_TOKS,
         _chat_turn_shingles,
-        clear_relation_cache,
     )
 
     turn = lambda tag: " ".join(  # noqa: E731
@@ -775,7 +773,7 @@ def test_chat_turn_dedup_is_role_aware(spark, tmp_path):
         # different classes share nothing at all
         assert sset(3) & sset(4) == set()
     finally:
-        clear_relation_cache(spark)
+        cache.clear(spark)
 
 
 def test_theta_kmv_sketch_merge_law(spark):

@@ -21,7 +21,7 @@ Change detection is function-level inside `free_etl_spark/queries/*`
     functions are imported elsewhere), every OTHER queries module
     importing from it is re-benched in full — cross-module helper
     exports like tpch_more.bought_baskets (consumed by graph.py) or
-    dedup._cached_relation would otherwise reopen the stale-bench
+    dedup._shingles would otherwise reopen the stale-bench
     window this tool exists to close (ADVICE r9).
 
 Usage:
@@ -218,7 +218,7 @@ def affected_queries(base: str) -> tuple[set[str], list[str]]:
 
     # pass 2b: changed queries modules as import SOURCES — a helper
     # one queries module exports to another (bought_baskets,
-    # _cached_relation, ...) must widen to the consumer's queries too.
+    # _shingles, ...) must widen to the consumer's queries too.
     for rel, (changed_funcs, helper_changed) in qmod_changes.items():
         modpath = rel[: -len(".py")].replace("/", ".")
         for qrel, members in by_file.items():

@@ -11,8 +11,8 @@ share of t_lo, which UNDERSTATES the exponent; treat e as a
 sanity bound, not a regression statistic. Each point is best-of-3 on
 a warm session (this host's stall variance is documented in bench.py).
 
-Cache discipline (ADVICE r10): the session relation caches
-(dedup._cached_relation, text._bpe_fit) are cleared before EVERY
+Cache discipline (ADVICE r10): the session cache (free_etl_spark/
+cache.py: relations, the BPE fit, prefix relations) is cleared before EVERY
 timed execution, so each number is the query's STANDALONE cost with
 its relation builds included — the build path is what must scale, and
 without the clear reps 2-3 of a cache-riding query (sim_ivf_topk,
@@ -63,7 +63,7 @@ DEFAULT = [
 
 def main() -> None:
     import free_etl_spark.queries as q
-    from free_etl_spark.queries import dedup
+    from free_etl_spark import cache
     from free_etl_spark.session import get_spark
     from free_etl_spark.tables import ALL_TABLES, load_table
 
@@ -84,7 +84,7 @@ def main() -> None:
             for name in names:
                 # standalone cost: no query rides another's (or its
                 # own prior rep's) persisted relation — see docstring
-                dedup.clear_relation_cache(spark)
+                cache.clear(spark)
                 t0 = time.time()
                 q.QUERIES[name](spark, sf_dir).write.format("noop").mode(
                     "overwrite"

@@ -46,8 +46,8 @@ _SWITCH_TARGETS = [
     "streaming_cdc_upsert",      # per-application target dir rebuild
     "streaming_cdc_with_deletes",  # tombstone target dir rebuild
     "sample_leakage_safe_split",  # rides the components/shingle caches
-    "sample_curriculum_shards",  # prefix._PART_CACHE replace-on-tag
-    "window_ntile_movavg",       # prefix._PART_CACHE replace-on-tag
+    "sample_curriculum_shards",  # cache.by_plan slot: a new plan retires
+    "window_ntile_movavg",       # cache.by_plan slot: a new plan retires
     "orders_rfm_segmentation",   # three prefix tags per construction
     "orders_also_bought",        # shared bought_baskets relation cache
     "graph_adamic_adar",         # same bought_baskets cache, 2nd consumer
@@ -62,8 +62,8 @@ _SWITCH_TARGETS = [
     "sim_ivf_recall_curve",
     "sim_ivf_build_stats",
     "multimodal_frame_phash_dedup",  # frame_phash_sig cache
-    "sample_epoch_mix_schedule",     # prefix._PART_CACHE tag
-    "text_bpe_encode",               # shared _bpe_fit memo
+    "sample_epoch_mix_schedule",     # cache.by_plan slot
+    "text_bpe_encode",               # shared cache.memo BPE fit
     "text_bpe_fertility_by_lang",    # same fit, 3rd consumer
     # r11: per-(sf, app) /tmp fixtures + temp views that must re-key
     # on an sf switch within one session
