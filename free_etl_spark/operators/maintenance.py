@@ -5,8 +5,8 @@ a schedule.
 **Compaction**: streaming/CDC writers leave many small files; scans
 then pay per-file open/footer costs and lose row-group locality.
 ``compact_parquet`` rewrites a directory (or its partitions) into
-size-targeted files. Safety: the rewrite goes to a temp sibling and
-swaps in only after success.
+size-targeted files. Safety: the rewrite goes to a staging sibling and
+``storage.promote`` swaps it in only after success.
 
 **Z-order**: a single-column sort gives perfect skipping on one
 predicate column and none on others. Interleaving the bits of several
@@ -19,12 +19,13 @@ index. The z-value is computed with JVM-side bit arithmetic (no UDF).
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 from pyspark.sql.types import NumericType
+
+from free_etl_spark import storage
 
 
 def _parquet_files(d: str) -> list[str]:
@@ -36,87 +37,28 @@ def _parquet_files(d: str) -> list[str]:
     ]
 
 
-_TMP_SUFFIX = "__compacting"
-_BACKUP_SUFFIX = "__precompact"
-
-
 def _leaf_dirs(table_dir: str) -> list[str]:
     """Directories that directly contain parquet files — for a
     hive-partitioned table these are the partition leaves; for a flat
-    table it is the table dir itself. In-flight swap dirs
-    (``*__compacting`` / ``*__precompact``) are never data leaves —
-    enumerating them would read a partition's rows twice under a
-    corrupted partition value (``region=eu__precompact`` parses as the
-    value 'eu__precompact')."""
-    leaves = set()
-    for dp, dns, fs in os.walk(table_dir):
-        dns[:] = [
-            d for d in dns
-            if not d.endswith((_TMP_SUFFIX, _BACKUP_SUFFIX))
-        ]
-        if any(f.endswith(".parquet") for f in fs):
-            leaves.add(dp)
-    return sorted(leaves)
-
-
-def _heal_table(table_dir: str) -> None:
-    """Recover from a compaction crashed mid-swap, BEFORE leaves are
-    enumerated. The per-leaf heal inside ``_compact_one_dir`` cannot
-    reach a partition whose data dir vanished mid-swap (rename(d→backup)
-    done, rename(tmp→d) not) because ``_leaf_dirs`` no longer lists
-    ``d`` at all. So heal table-wide first:
-
-    - ``X__precompact`` with ``X`` missing → the crash happened between
-      the two renames; the backup holds the complete original — restore
-      it (the interrupted compaction's work is discarded, never its
-      data).
-    - ``X__precompact`` with ``X`` present → crash after the swap
-      completed but before cleanup; the backup is a stale duplicate —
-      delete it.
-    - ``X__compacting`` → always stale (either superseded by a restore
-      or already promoted); delete it."""
-    for dp, dns, _ in os.walk(table_dir):
-        for d in list(dns):
-            full = os.path.join(dp, d)
-            if d.endswith(_BACKUP_SUFFIX):
-                data_dir = full[: -len(_BACKUP_SUFFIX)]
-                if not os.path.isdir(data_dir):
-                    os.rename(full, data_dir)
-                else:
-                    shutil.rmtree(full, ignore_errors=True)
-                dns.remove(d)
-            elif d.endswith(_TMP_SUFFIX):
-                shutil.rmtree(full, ignore_errors=True)
-                dns.remove(d)
+    table it is the table dir itself."""
+    return sorted(
+        {
+            dp
+            for dp, _, fs in os.walk(table_dir)
+            if any(f.endswith(".parquet") for f in fs)
+        }
+    )
 
 
 def _compact_one_dir(spark: SparkSession, d: str, target_file_mb: int) -> None:
-    """Compact one flat directory of parquet files in place, crash-safe:
-
-    1. stale state from a previous crashed run is healed first
-       (backup present + data dir missing → restore the backup);
-    2. the rewrite lands in a temp sibling; the swap is
-       rename(data→backup), rename(tmp→data), delete(backup) — a crash
-       between the renames is recoverable (step 1) and never loses
-       data, because the backup holds the complete original until the
-       new data dir is in place."""
-    tmp = d.rstrip("/") + _TMP_SUFFIX
-    backup = d.rstrip("/") + _BACKUP_SUFFIX
-    # heal a previous crashed swap: data dir gone, backup intact
-    # (redundant with compact_parquet's table-level _heal_table, kept
-    # for direct callers of this helper)
-    if os.path.isdir(backup) and not os.path.isdir(d):
-        os.rename(backup, d)
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(backup, ignore_errors=True)
-
+    """Compact one flat directory of parquet files in place: rewrite
+    into its staging dir, then ``storage.promote``."""
+    stage = d + storage.BUILDING
     files = _parquet_files(d)
     total_bytes = sum(os.path.getsize(f) for f in files)
     n_out = max(1, -(-total_bytes // (target_file_mb << 20)))
-    spark.read.parquet(d).repartition(n_out).write.mode("overwrite").parquet(tmp)
-    os.rename(d, backup)
-    os.rename(tmp, d)
-    shutil.rmtree(backup, ignore_errors=True)
+    spark.read.parquet(d).repartition(n_out).write.mode("overwrite").parquet(stage)
+    storage.promote(d, stage)
 
 
 def compact_parquet(
@@ -134,12 +76,13 @@ def compact_parquet(
 
     Returns (files_before, files_after). Per-leaf output file count is
     derived from actual on-disk bytes / target size (ceil, min 1).
-    Each leaf swap is crash-safe and self-healing: stale swap state
-    from a crashed prior run is healed table-wide FIRST
-    (``_heal_table``) so a partition whose data dir vanished mid-swap
-    is restored rather than its ``__precompact`` leftovers being
-    mistaken for data leaves."""
-    _heal_table(table_dir)
+    Each leaf swap is crash-safe: ``storage.heal_tree`` resolves a
+    crashed prior run's swaps table-wide FIRST, by ``storage``'s heal
+    rule, so a leaf whose data dir vanished mid-swap is restored and no
+    swap leftover is ever enumerated as a data leaf (``region=eu`` +
+    a suffix would parse as a corrupted partition value)."""
+    table_dir = table_dir.rstrip("/")
+    storage.heal_tree(table_dir)
     n_before = len(_parquet_files(table_dir))
     for leaf in _leaf_dirs(table_dir):
         _compact_one_dir(spark, leaf, target_file_mb)

@@ -66,6 +66,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from free_etl_spark import storage
+
 
 class CommitConflict(RuntimeError):
     """A concurrent commit was published between this writer's read of
@@ -144,14 +146,11 @@ def write_checkpoint(table_dir: str, version: int | None = None) -> int:
         "schema": state["schema"],
         "commit_ts": state["commit_ts"],
     }
-    tmp = _ckpt_path(table_dir, version) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(ckpt, f)
-    os.replace(tmp, _ckpt_path(table_dir, version))
-    ptr_tmp = os.path.join(_log_dir(table_dir), "_last_checkpoint.tmp")
-    with open(ptr_tmp, "w") as f:
-        json.dump({"version": version}, f)
-    os.replace(ptr_tmp, os.path.join(_log_dir(table_dir), "_last_checkpoint"))
+    storage.write_atomic(_ckpt_path(table_dir, version), json.dumps(ckpt))
+    storage.write_atomic(
+        os.path.join(_log_dir(table_dir), "_last_checkpoint"),
+        json.dumps({"version": version}),
+    )
     return version
 
 

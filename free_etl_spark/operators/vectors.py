@@ -15,6 +15,8 @@ import contextlib
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from free_etl_spark import storage
+
 # Above this, a codebook is no longer "small by construction" for
 # driver round-trips / broadcasts (VERDICT r14 task 6): K = √N puts
 # K×dim×8B at ~0.5 GB per kmeans iteration at 10^12 vectors. Guarded
@@ -481,12 +483,9 @@ def _write_pq_sidecar(
     import os
 
     pq_cb.write.mode("overwrite").parquet(os.path.join(path, "_pq_codebook"))
-    tmp = _pq_meta_path(path) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"m": m, "sub": sub, "c": c}, f)
-    import os as _os
-
-    _os.replace(tmp, _pq_meta_path(path))
+    storage.write_atomic(
+        _pq_meta_path(path), json.dumps({"m": m, "sub": sub, "c": c})
+    )
 
 
 def _decode_codes(coded: DataFrame, pq_cb: DataFrame) -> DataFrame:
@@ -529,6 +528,16 @@ def _store_listing_sig(spark, path: str) -> str:
     return hashlib.md5("\n".join(files).encode()).hexdigest()
 
 
+def _stamp_decoded(spark, path: str) -> None:
+    """Record the store listing the decoded sidecar now matches."""
+    import json
+
+    storage.write_atomic(
+        _decoded_meta_path(path),
+        json.dumps({"sig": _store_listing_sig(spark, path)}),
+    )
+
+
 def write_decoded_sidecar(spark, path: str) -> None:
     """Materialize the decoded-residual relation of a PQ-coded store
     as ``{path}/_pq_decoded`` (partitioned by cent_id, like the store)
@@ -546,7 +555,6 @@ def write_decoded_sidecar(spark, path: str) -> None:
     Crash-safe by the meta-last rule: data append/rewrite before the
     sig update means a crash leaves a STALE sig → readers fall back
     to on-the-fly decode, and the next maintenance call rebuilds."""
-    import json
     import os
 
     if pq_meta(path) is None:
@@ -556,10 +564,7 @@ def write_decoded_sidecar(spark, path: str) -> None:
     _by_cell(_decode_codes(store, pq_cb)).write.mode(
         "overwrite"
     ).partitionBy("cent_id").parquet(os.path.join(path, "_pq_decoded"))
-    tmp = _decoded_meta_path(path) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"sig": _store_listing_sig(spark, path)}, f)
-    os.replace(tmp, _decoded_meta_path(path))
+    _stamp_decoded(spark, path)
 
 
 def pq_decoded(spark, path: str) -> DataFrame | None:
@@ -793,8 +798,6 @@ def _ivf_append_scoped(
             # O(batch) sidecar maintenance: decode ONLY the appended
             # rows and append them, then re-stamp the sig (meta-last:
             # a crash in between leaves a stale sig → fallback+rebuild)
-            import json as _json
-
             _by_cell(
                 _decode_codes(
                     rows.select("vec_id", "cent_id", "pq_code"), pq_cb
@@ -802,10 +805,7 @@ def _ivf_append_scoped(
             ).write.mode("append").partitionBy("cent_id").parquet(
                 os.path.join(path, "_pq_decoded")
             )
-            tmp = _decoded_meta_path(path) + ".tmp"
-            with open(tmp, "w") as f:
-                _json.dump({"sig": _store_listing_sig(spark, path)}, f)
-            os.replace(tmp, _decoded_meta_path(path))
+            _stamp_decoded(spark, path)
         else:
             write_decoded_sidecar(spark, path)
         rows.unpersist()
@@ -983,24 +983,14 @@ def ivf_recluster(
     rises (recall). This rebuilds with K regrown to
     scaled_centroid_k(N_current) unless ``k`` is given, APPLIES any
     pending tombstones (the rebuilt store simply excludes them — the
-    cheapest compaction there is), and promotes via the rename-aside
-    protocol of maintenance.compact_parquet:
-
-    1. heal: ``__retired`` present + live missing → a previous swap
-       crashed between its two renames; the retired dir holds the
-       complete previous store — restore it. Any other ``__retired``
-       or ``__recluster_stage`` leftover is stale — delete (a
-       recluster recomputes from the live store, so discarding an
-       interrupted build never loses data).
-    2. build the full new layout (data partitioned by cent_id +
-       ``_codebook``) in ``{path}__recluster_stage``.
-    3. swap: rename(live → retired), rename(stage → live),
-       delete(retired). A crash at any point leaves either the old
-       store live, or the old store in ``__retired`` with the live
-       dir missing — both states heal on the next call, and probes
-       against a healed store are correct (pending tombstones keep
-       masking until a swap actually completes, because the WAL is
-       inside the store dir and travels with it).
+    cheapest compaction there is), and publishes the new layout (data
+    partitioned by cent_id + ``_codebook``) with ``storage.promote``
+    after ``storage.heal`` resolved any crashed prior swap by its rule.
+    A recluster recomputes from the live store, so a discarded
+    interrupted build never loses data, and probes against a healed
+    store are correct (pending tombstones keep masking until a swap
+    completes, because the WAL is inside the store dir and travels
+    with it).
 
     Cost at 100 TB: iters+1 broadcast-codebook argmin passes + iters
     k×dims mean shuffles + ONE full partitioned rewrite — the rewrite
@@ -1008,27 +998,16 @@ def ivf_recluster(
     cluster's full write bandwidth. Run it when drift_check says so,
     not on a schedule. Returns the fresh codebook (read back from the
     promoted store, so a successful return proves the swap)."""
-    import os
-    import shutil
-
-    stage = path.rstrip("/") + "__recluster_stage"
-    retired = path.rstrip("/") + "__retired"
-    if os.path.isdir(retired) and not os.path.isdir(path):
-        os.rename(retired, path)
-    shutil.rmtree(retired, ignore_errors=True)
-    shutil.rmtree(stage, ignore_errors=True)
-
+    path = path.rstrip("/")
+    storage.heal(path)
     with _maintenance_scope(spark):
-        return _ivf_recluster_scoped(spark, path, stage, retired, k,
-                                     codebook, iters)
+        return _ivf_recluster_scoped(spark, path, k, codebook, iters)
 
 
-def _ivf_recluster_scoped(
-    spark, path, stage, retired, k, codebook, iters
-) -> DataFrame:
+def _ivf_recluster_scoped(spark, path, k, codebook, iters) -> DataFrame:
     import os
-    import shutil
 
+    stage = path + storage.BUILDING
     data = spark.read.parquet(path)
     # stale per-row columns (the old assignment AND the old PQ codes —
     # both are functions of the centroids being replaced) are dropped;
@@ -1079,9 +1058,7 @@ def _ivf_recluster_scoped(
     cent.write.mode("overwrite").parquet(os.path.join(stage, "_codebook"))
     if pq_cb is not None:
         _write_pq_sidecar(stage, pq_cb, meta["m"], meta["sub"], meta["c"])
-    os.rename(path, retired)
-    os.rename(stage, path)
-    shutil.rmtree(retired, ignore_errors=True)
+    storage.promote(path, stage)
     if meta is not None:
         # new centroids + new codes ⇒ the decoded-residual sidecar is
         # entirely new too; recluster already re-encodes O(corpus), so
@@ -1257,10 +1234,7 @@ def ivf_recluster_incremental(
                 shutil.rmtree(live_cb)
             os.rename(cb_new_dir, live_cb)
         if pq_meta(path) is not None:
-            tmp = _decoded_meta_path(path) + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump({"sig": _store_listing_sig(spark, path)}, f)
-            os.replace(tmp, _decoded_meta_path(path))
+            _stamp_decoded(spark, path)
 
     # recovery: a COMPLETE stage (marker present) is applied; an
     # incomplete one is a crashed build — discarded (recomputed below)
@@ -1440,10 +1414,10 @@ def ivf_recluster_incremental(
             for c in rewrite_set
             if not os.path.isdir(os.path.join(stage, "rewrite", f"cent_id={c}"))
         ]
-        tmp = apply_marker + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"rewrite": rewrite_set, "emptied": emptied}, f)
-        os.replace(tmp, apply_marker)  # stage is now COMPLETE
+        storage.write_atomic(  # stage is now COMPLETE
+            apply_marker,
+            json.dumps({"rewrite": rewrite_set, "emptied": emptied}),
+        )
     # 5. apply + retire
     _apply_stage()
     shutil.rmtree(stage, ignore_errors=True)

@@ -19,7 +19,7 @@ Design:
   every data file under the source table — rename- and append-
   sensitive, mtime-free (mtimes don't survive copies).
 - ``run_pipeline`` runs in two phases. PLAN, on the calling thread in
-  topo order: compute every signature, sweep swap debris and compare
+  topo order: compute every signature, heal swap debris and compare
   each stored ``_meta.json`` signature: match → SKIP (the materialized
   parquet is current, its recorded schema is known), mismatch/missing
   → dirty. A signature depends only on versions, dep signatures and
@@ -28,7 +28,7 @@ Design:
   submitted to a thread pool sized to the dirty set (threads start
   lazily, so the DAG's real width bounds them); a worker reads its
   deps with their recorded schemas, builds the step and writes it to
-  its ``__building`` dir; the calling thread promotes each finished
+  its staging dir; the calling thread promotes each finished
   step and submits the steps it made ready. Independent branches thus
   run their Spark jobs side by side, while every live-dir mutation
   stays on one thread. Each submit is wrapped in its own
@@ -49,13 +49,12 @@ Design:
 Scale notes: signatures read file LISTINGS only (no data); each step
 writes through the engine's normal partitioned writers, so a 100 TB
 step parallelizes exactly like the operator it wraps; skipping is
-O(metadata). Failure atomicity: steps write to a ``__building``
-temp dir and promote via a rename-aside swap (old -> ``__retired``,
-tmp -> live, delete retired — the compact_parquet discipline,
-operators/maintenance.py): a crash at any point leaves either the old
-materialization readable or the step missing its ``_meta.json``, which
-forces a rebuild — never a half-written live dir. Leftover
-``__building``/``__retired`` dirs are swept on the next run. When a
+O(metadata). Failure atomicity: a step is built in its staging dir
+and published by ``storage.promote``; the plan phase runs
+``storage.heal`` on every step first (see ``storage`` for the rule),
+so a crash at any point leaves the old or the new materialization —
+a stale one is rebuilt by its signature — never a half-written live
+dir. When a
 build raises, no further step starts; the steps already in flight
 finish and are promoted, then the first error propagates. The next
 run therefore skips those steps and builds only the failed step, its
@@ -76,6 +75,8 @@ from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+from free_etl_spark import storage
 
 
 @dataclass
@@ -174,7 +175,7 @@ def _build_step(
     sig: str,
     dep_schemas: Mapping[str, dict | None],
 ) -> tuple[dict, int]:
-    """Build one step into its ``__building`` dir and stamp its
+    """Build one step into its staging dir and stamp its
     ``_meta.json`` there; return (schema, rows). Runs on a pool
     thread and touches no live dir."""
     inputs = {
@@ -183,7 +184,7 @@ def _build_step(
     }
     df = step.build(spark, inputs)
     schema = df.schema.jsonValue()
-    tmp_dir = os.path.join(lake_dir, step.name) + "__building"
+    tmp_dir = os.path.join(lake_dir, step.name) + storage.BUILDING
     obs = Observation()
     df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
         "overwrite"
@@ -192,17 +193,6 @@ def _build_step(
     with open(os.path.join(tmp_dir, "_meta.json"), "w") as f:
         json.dump({"signature": sig, "rows": rows, "schema": schema}, f)
     return schema, rows
-
-
-def _promote(out_dir: str) -> None:
-    """Rename-aside swap of ``out_dir + "__building"`` into ``out_dir``
-    (never rmtree-the-live-then-rename: a crash between those left
-    NEITHER old nor new — ADVICE r11)."""
-    retired = out_dir + "__retired"
-    if os.path.exists(out_dir):
-        os.rename(out_dir, retired)
-    os.rename(out_dir + "__building", out_dir)
-    shutil.rmtree(retired, ignore_errors=True)
 
 
 def run_pipeline(
@@ -226,11 +216,7 @@ def run_pipeline(
     for step in order:
         sigs[step.name] = sig = _signature(step, sigs)
         out_dir = os.path.join(lake_dir, step.name)
-        # sweep swap debris a previous crash may have stranded (the
-        # live dir, if present, is always the authoritative one; a
-        # __building dir is by definition unpromoted)
-        shutil.rmtree(out_dir + "__retired", ignore_errors=True)
-        shutil.rmtree(out_dir + "__building", ignore_errors=True)
+        storage.heal(out_dir)
         meta = _read_meta(out_dir)
         if meta.get("signature") == sig:
             schemas[step.name] = meta.get("schema")
@@ -270,7 +256,8 @@ def run_pipeline(
                 except BaseException as e:  # re-raised once in-flight steps land
                     error = error or e
                     continue
-                _promote(os.path.join(lake_dir, name))
+                out_dir = os.path.join(lake_dir, name)
+                storage.promote(out_dir, out_dir + storage.BUILDING)
                 schemas[name] = schema
                 manifest[name] = {
                     "action": "built",
@@ -303,28 +290,22 @@ def run_partitioned_step(
     receives their union (partition column included via basePath
     discovery) and the result is written once with
     ``partitionBy(partition_col)`` to a staging dir, then promoted
-    per-partition via the rename-aside swap (never delete-then-
-    rename). At 100 TB a late-data day therefore costs one job over
-    one day's bytes, not a full-table rebuild, and no sequential
-    per-partition job storm.
+    per-partition by ``storage.promote``. At 100 TB a late-data day
+    therefore costs one job over one day's bytes, not a full-table
+    rebuild, and no sequential per-partition job storm.
 
-    Crash windows: the staging dir is unpromoted by construction; a
-    crash between per-partition renames leaves that partition's live
-    dir missing, which the dirty check treats as dirty (stored
-    signature alone never authorizes a skip — the output dir must
-    exist); ``_parts.json`` is stamped last via atomic ``os.replace``,
-    so a pre-stamp crash merely rebuilds idempotently. Debris
-    (``__building``/``__retired``) is swept on entry.
+    Crash windows: ``storage.heal_tree`` runs on entry, so every
+    partition is back at its old or its new version; ``_parts.json``
+    is stamped last (``storage.write_atomic``), and a partition whose
+    stamp is stale or whose live dir is missing counts as dirty, so a
+    pre-stamp crash merely rebuilds idempotently.
 
     Returns {"rebuilt": [...], "skipped": [...]} by partition dir
     name (e.g. ``yr=1995``).
     """
     out_dir = os.path.join(lake_dir, name)
     os.makedirs(out_dir, exist_ok=True)
-    shutil.rmtree(out_dir + "__building", ignore_errors=True)
-    for d in os.listdir(out_dir):
-        if d.endswith("__retired"):
-            shutil.rmtree(os.path.join(out_dir, d), ignore_errors=True)
+    storage.heal_tree(out_dir)
 
     live: dict[str, str] = {}
     for d in sorted(os.listdir(source_dir)):
@@ -359,28 +340,20 @@ def run_partitioned_step(
         src = spark.read.option("basePath", source_dir).parquet(
             *[os.path.join(source_dir, d) for d in dirty]
         )
-        staging = out_dir + "__building"
+        staging = out_dir + storage.BUILDING
         build(spark, src).write.mode("overwrite").partitionBy(
             partition_col
         ).parquet(staging)
         for d in dirty:
-            live_part = os.path.join(out_dir, d)
             new_part = os.path.join(staging, d)
-            retired = live_part + "__retired"
-            if os.path.exists(live_part):
-                os.rename(live_part, retired)
-            if os.path.exists(new_part):
-                os.rename(new_part, live_part)
-            else:
-                # build() yielded zero rows for this partition:
-                # partitionBy writes no leaf dir. Materialize an empty
-                # live dir so the _parts.json stamp and the on-disk
-                # state agree — otherwise the dirty check (`not
-                # isdir`) rebuilds this partition on every run forever
-                # (ADVICE r12). An empty leaf contributes zero rows to
-                # spark.read.parquet(out_dir), same as absence.
-                os.makedirs(live_part, exist_ok=True)
-            shutil.rmtree(retired, ignore_errors=True)
+            # build() yielded zero rows for this partition: partitionBy
+            # writes no leaf dir. Promote an empty one so the
+            # _parts.json stamp and the on-disk state agree — otherwise
+            # the dirty check (`not isdir`) rebuilds this partition on
+            # every run forever (ADVICE r12). An empty leaf contributes
+            # zero rows to spark.read.parquet(out_dir), same as absence.
+            os.makedirs(new_part, exist_ok=True)
+            storage.promote(os.path.join(out_dir, d), new_part)
         shutil.rmtree(staging, ignore_errors=True)
 
     # Drop output partitions whose source partition vanished. Sweep by
@@ -404,8 +377,5 @@ def run_partitioned_step(
             and not os.path.isdir(os.path.join(source_dir, d))
         ):
             shutil.rmtree(os.path.join(out_dir, d), ignore_errors=True)
-    tmp = parts_path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({d: live[d] for d in live}, f)
-    os.replace(tmp, parts_path)
+    storage.write_atomic(parts_path, json.dumps(live))
     return {"rebuilt": sorted(dirty), "skipped": sorted(skipped)}

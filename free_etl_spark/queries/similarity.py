@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from free_etl_spark import cache
+from free_etl_spark import cache, storage
 from free_etl_spark.registry import query
 from free_etl_spark.tables import load_table
 
@@ -3135,10 +3135,7 @@ def _ivfpq_store(spark: SparkSession, sf_dir: str) -> str:
         pq_c=_IVFPQ_C,
     )
     # marker LAST: a crash mid-build leaves no marker → full rebuild
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"mtime": mtime}, f)
-    os.replace(tmp, marker)
+    storage.write_atomic(marker, json.dumps({"mtime": mtime}))
     return path
 
 

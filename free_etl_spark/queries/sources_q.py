@@ -22,6 +22,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from free_etl_spark import storage
 from free_etl_spark.registry import query
 from free_etl_spark.tables import load_table
 
@@ -596,10 +597,7 @@ def source_corrupt_record_quarantine(
         for i in range(200):
             qty = "oops" if i % 10 == 7 else str(i * 10)
             lines.append(f"{i},{qty}")
-        tmp = path + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write("\n".join(lines) + "\n")
-        os.replace(tmp, path)
+        storage.write_atomic(path, "\n".join(lines) + "\n")
     raw = (
         spark.read.schema("id long, qty long, _corrupt string")
         .option("header", True)
@@ -1367,10 +1365,8 @@ def source_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         ):
             with open(os.path.join(log_dir, f"v{v}.json"), "w") as f:
                 json.dump(man, f)
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"versions": 3}, f)  # marker LAST: crash => rebuild
-        os.replace(tmp, marker)
+        # marker LAST: crash => rebuild
+        storage.write_atomic(marker, json.dumps({"versions": 3}))
 
     def as_of(v: int) -> DataFrame:
         with open(os.path.join(log_dir, f"v{v}.json")) as f:
@@ -1514,10 +1510,7 @@ def source_log_compact_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
                 {"retain": 1, "n_vacuumed": len(doomed), "vacuumed": doomed},
                 f,
             )
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"versions": 4}, f)
-        os.replace(tmp, marker)
+        storage.write_atomic(marker, json.dumps({"versions": 4}))
 
     with open(os.path.join(log_dir, "v4.json")) as f:
         man = json.load(f)
@@ -1621,10 +1614,8 @@ def source_time_travel_timestamp(spark: SparkSession, sf_dir: str) -> DataFrame:
             commit_version(spark, base, df, op, commit_ts=ts,
                            checkpoint_interval=2)
         assert latest_version(base) == 5
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"versions": 5}, f)  # marker LAST: crash => rebuild
-        os.replace(tmp, marker)
+        # marker LAST: crash => rebuild
+        storage.write_atomic(marker, json.dumps({"versions": 5}))
 
     def as_of(ts: str) -> DataFrame:
         plan = plan_read(base, timestamp=ts)
@@ -1719,10 +1710,7 @@ def source_time_travel_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         commit_version(spark, base, v1, "overwrite")
         commit_version(spark, base, v2, "append")
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"versions": 2}, f)
-        os.replace(tmp, marker)
+        storage.write_atomic(marker, json.dumps({"versions": 2}))
 
     r1 = read_version(spark, base, 1)
     r2 = read_version(spark, base, 2)

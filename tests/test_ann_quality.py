@@ -16,6 +16,7 @@ import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 import pytest
 
+from free_etl_spark import storage
 from free_etl_spark.operators.vectors import lsh_bits, scaled_centroid_k
 from free_etl_spark.queries import QUERIES
 from free_etl_spark.queries.similarity import lsh_band_keys, lsh_candidate_pairs
@@ -656,7 +657,7 @@ def test_ivf_recluster_swaps_applies_tombstones_keeps_recall(spark, tmp_path):
     pre = _recall_at5(cent_old, 4)
 
     # (c-1) a junk stage dir from a crashed build must be discarded
-    stale_stage = f"{path}__recluster_stage"
+    stale_stage = path + storage.BUILDING
     os.makedirs(os.path.join(stale_stage, "cent_id=999999"))
     open(
         os.path.join(stale_stage, "cent_id=999999", "junk.parquet"), "w"
@@ -664,7 +665,7 @@ def test_ivf_recluster_swaps_applies_tombstones_keeps_recall(spark, tmp_path):
 
     cent2 = ivf_recluster(spark, path)
     assert not os.path.exists(stale_stage)
-    assert not os.path.exists(f"{path}__retired")
+    assert not os.path.exists(path + storage.RETIRED)
 
     # (a) tombstones applied + WAL retired; live corpus exact
     assert ivf_tombstones(spark, path) is None
@@ -710,9 +711,9 @@ def test_ivf_recluster_swaps_applies_tombstones_keeps_recall(spark, tmp_path):
     # (c-2) crash between the two swap renames: live dir gone, retired
     # holds the complete previous store — the next recluster restores
     # it first, then completes; the final store is whole either way
-    os.rename(path, f"{path}__retired")
+    os.rename(path, path + storage.RETIRED)
     cent3 = ivf_recluster(spark, path)
-    assert not os.path.exists(f"{path}__retired")
+    assert not os.path.exists(path + storage.RETIRED)
     store3 = spark.read.parquet(path)
     assert {r.vec_id for r in store3.select("vec_id").collect()} == live
     assert cent3.count() == n_cells

@@ -111,3 +111,58 @@ def test_session_cache_lives_only_in_cache_py():
                 ):
                     found.append(f"{rel}:{node.lineno} {names}")
     assert not found, f"session caches outside free_etl_spark/cache.py: {found}"
+
+
+def test_commit_protocol_lives_only_in_storage_py():
+    """free_etl_spark/storage.py is the one home of the rename-aside
+    promote, its heal and the atomic stamp: no other module may call
+    ``os.rename``/``os.replace`` or spell a swap suffix itself.
+    vectors.ivf_recluster_incremental is exempt: it rolls a completed
+    stage forward under its ``_apply.json`` marker, a different
+    protocol."""
+    import ast
+
+    from free_etl_spark.storage import BUILDING, RETIRED
+
+    class Scan(ast.NodeVisitor):
+        def __init__(self, rel):
+            self.rel = rel
+            self.os_names = {"os"}
+
+        def visit_Import(self, node):
+            for a in node.names:
+                if a.name == "os":
+                    self.os_names.add(a.asname or "os")
+
+        def visit_FunctionDef(self, node):
+            if (self.rel, node.name) != (
+                "free_etl_spark/operators/vectors.py",
+                "ivf_recluster_incremental",
+            ):
+                self.generic_visit(node)
+
+        def visit_Call(self, node):
+            f = node.func
+            if (
+                isinstance(f, ast.Attribute)
+                and isinstance(f.value, ast.Name)
+                and f.value.id in self.os_names
+                and f.attr in ("rename", "replace")
+            ):
+                found.append(f"{self.rel}:{node.lineno} {ast.unparse(f)}")
+            self.generic_visit(node)
+
+        def visit_Constant(self, node):
+            if node.value in (BUILDING, RETIRED):
+                found.append(f"{self.rel}:{node.lineno} {node.value!r}")
+
+    root = os.path.join(HERE, "free_etl_spark")
+    found = []
+    for dirpath, _dirs, files in os.walk(root):
+        for fn in files:
+            path = os.path.join(dirpath, fn)
+            rel = os.path.relpath(path, HERE)
+            if fn.endswith(".py") and rel != "free_etl_spark/storage.py":
+                with open(path) as f:
+                    Scan(rel).visit(ast.parse(f.read()))
+    assert not found, f"commit protocol outside free_etl_spark/storage.py: {found}"

@@ -105,15 +105,18 @@ def test_compact_preserves_hive_partitions(spark, tmp_path):
 
 
 def test_compact_heals_crash_between_swap_renames(spark, tmp_path):
-    """Crash simulated at the worst point: rename(data→backup) done,
-    rename(tmp→data) not — the partition's data dir is GONE and only
-    ``leaf__precompact`` (complete original) + ``leaf__compacting``
-    (tmp rewrite) remain. Re-running compact_parquet must restore the
-    partition from the backup and must NOT enumerate the swap dirs as
-    data leaves (which would duplicate rows under a corrupted
-    partition value like region=eu__precompact)."""
+    """Crash simulated at the worst point: rename(data→retired) done,
+    rename(staged→data) not — the partition's data dir is GONE and only
+    ``leaf + storage.RETIRED`` (complete original) + ``leaf +
+    storage.BUILDING`` (staged rewrite) remain. Re-running
+    compact_parquet must restore the partition from the retired copy
+    and must NOT enumerate the swap dirs as data leaves (which would
+    duplicate rows under a corrupted partition value like
+    region=eu__retired)."""
     import os
     import shutil
+
+    from free_etl_spark.storage import BUILDING, RETIRED
 
     out = str(tmp_path / "crash")
     df = spark.createDataFrame(
@@ -124,15 +127,15 @@ def test_compact_heals_crash_between_swap_renames(spark, tmp_path):
     want = {(r["id"], r["region"]) for r in spark.read.parquet(out).collect()}
 
     leaf = os.path.join(out, "region=eu")
-    # the in-flight rewrite had landed in tmp...
-    spark.read.parquet(leaf).coalesce(1).write.parquet(leaf + "__compacting")
+    # the in-flight rewrite had landed in its staging dir...
+    spark.read.parquet(leaf).coalesce(1).write.parquet(leaf + BUILDING)
     # ...and the first swap rename had completed when the process died
-    os.rename(leaf, leaf + "__precompact")
+    os.rename(leaf, leaf + RETIRED)
     assert not os.path.isdir(leaf)
 
     n_before, n_after = compact_parquet(spark, out, target_file_mb=512)
-    assert not os.path.isdir(leaf + "__precompact")
-    assert not os.path.isdir(leaf + "__compacting")
+    assert not os.path.isdir(leaf + RETIRED)
+    assert not os.path.isdir(leaf + BUILDING)
     got = {(r["id"], r["region"]) for r in spark.read.parquet(out).collect()}
     assert got == want  # nothing lost, nothing duplicated
     regions = {
@@ -140,13 +143,13 @@ def test_compact_heals_crash_between_swap_renames(spark, tmp_path):
     }
     assert regions == {"region=eu", "region=us"}  # no corrupted values
 
-    # crash AFTER the swap completed (backup + tmp leftovers, data dir
-    # present): leftovers are stale duplicates and must be deleted
-    shutil.copytree(leaf, leaf + "__precompact")
-    spark.read.parquet(leaf).coalesce(1).write.parquet(leaf + "__compacting")
+    # crash AFTER the swap completed (retired + staged leftovers, data
+    # dir present): leftovers are stale duplicates and must be deleted
+    shutil.copytree(leaf, leaf + RETIRED)
+    spark.read.parquet(leaf).coalesce(1).write.parquet(leaf + BUILDING)
     compact_parquet(spark, out, target_file_mb=512)
-    assert not os.path.isdir(leaf + "__precompact")
-    assert not os.path.isdir(leaf + "__compacting")
+    assert not os.path.isdir(leaf + RETIRED)
+    assert not os.path.isdir(leaf + BUILDING)
     got = {(r["id"], r["region"]) for r in spark.read.parquet(out).collect()}
     assert got == want
 

@@ -9,11 +9,13 @@ from __future__ import annotations
 import dataclasses
 import json
 import os
+import shutil
 import threading
 
 import pyspark.sql.functions as F
 from pyspark.sql.types import StructType
 
+from free_etl_spark import storage
 from free_etl_spark.plans.pipeline import Step, run_pipeline
 from free_etl_spark.tables import load_table
 from tests.conftest import SF_DIR
@@ -148,10 +150,10 @@ def test_pipeline_crash_between_steps_recovers(spark, tmp_path):
     (b) a crash after the stage write but before promote (stranded
     ``__building``) is swept and never read; (c) a crash between the
     two promote renames (live dir missing, ``__retired`` holds the
-    old build) rebuilds the step and sweeps the debris. Every path
-    ends at the same final values as the direct computation."""
-    import shutil
-
+    old build) restores that build, which still carries the current
+    signature, so the step is skipped; (d) a missing live dir with no
+    retired copy rebuilds the step. Every path ends at the same final
+    values as the direct computation."""
     import pytest
 
     lake = str(tmp_path / "lake")
@@ -188,26 +190,34 @@ def test_pipeline_crash_between_steps_recovers(spark, tmp_path):
     }
 
     # (b) stranded __building beside a CURRENT step: swept, not read
-    junk = os.path.join(lake, "by_lang__building")
+    junk = os.path.join(lake, "by_lang" + storage.BUILDING)
     os.makedirs(junk)
     open(os.path.join(junk, "junk.parquet"), "w").close()
     m = run_pipeline(spark, _steps_with_bomb(), lake)
     assert m["by_lang"]["action"] == "skipped"
     assert not os.path.exists(junk)
 
+    def by_lang():
+        return {
+            r["lang"]: (r["n_docs"], r["chars"])
+            for r in spark.read.parquet(os.path.join(lake, "by_lang")).collect()
+        }
+
     # (c) crash between the promote renames: live gone, retired holds
-    # the old build — missing _meta forces a rebuild, debris is swept
-    os.rename(
-        os.path.join(lake, "by_lang"), os.path.join(lake, "by_lang__retired")
-    )
+    # the complete previous build — restored, and its signature is
+    # current, so the step is skipped
+    live = os.path.join(lake, "by_lang")
+    os.rename(live, live + storage.RETIRED)
+    m = run_pipeline(spark, _steps_with_bomb(), lake)
+    assert m["by_lang"]["action"] == "skipped"
+    assert not os.path.exists(live + storage.RETIRED)
+    assert by_lang() == direct
+
+    # (d) live dir missing and no retired copy: rebuilt
+    shutil.rmtree(live)
     m = run_pipeline(spark, _steps_with_bomb(), lake)
     assert m["by_lang"]["action"] == "built"
-    assert not os.path.exists(os.path.join(lake, "by_lang__retired"))
-    got = {
-        r["lang"]: (r["n_docs"], r["chars"])
-        for r in spark.read.parquet(os.path.join(lake, "by_lang")).collect()
-    }
-    assert got == direct
+    assert by_lang() == direct
 
 
 def _meta(lake: str, step: str) -> dict:
@@ -479,9 +489,11 @@ def test_partitioned_step_rebuilds_only_dirty_partition(spark, tmp_path):
 
 def test_partitioned_step_crash_recovery_matrix(spark, tmp_path):
     """Kill windows: (a) staged-but-unpromoted __building; (b) between
-    per-partition promote renames (live dir missing); (c) pre-stamp
-    (_parts.json stale). Every window must recover to the exact
-    direct-recompute answer on the next run."""
+    per-partition promote renames (live dir renamed aside, restored by
+    the heal); (c) pre-stamp (_parts.json stale); (d) a live partition
+    dir missing with no retired copy (dirty despite its stamp). Every
+    window must recover to the exact direct-recompute answer on the
+    next run."""
     from free_etl_spark.plans.pipeline import run_partitioned_step
 
     src = str(tmp_path / "src")
@@ -490,27 +502,36 @@ def test_partitioned_step_crash_recovery_matrix(spark, tmp_path):
     run_partitioned_step(spark, "agg", src, "pk", _part_build, lake)
     out = os.path.join(lake, "agg")
 
-    # (a) stranded staging dir from a crashed build
-    os.makedirs(out + "__building/pk=9", exist_ok=True)
-    open(out + "__building/pk=9/part-junk.parquet", "w").write("junk")
-    # (b) a promote crash: live partition dir renamed aside, gone
-    os.rename(
-        os.path.join(out, "pk=2"), os.path.join(out, "pk=2__retired")
-    )
-    # (c) stamp rolled back: signatures claim everything is clean
-    m = run_partitioned_step(spark, "agg", src, "pk", _part_build, lake)
-    assert m["rebuilt"] == ["pk=2"]  # missing dir => dirty despite stamp
-    assert not os.path.exists(out + "__building")
-    assert not os.path.exists(os.path.join(out, "pk=2__retired"))
-    got = {
-        (r["pk"], r["n"], r["chars"])
-        for r in spark.read.parquet(out).collect()
-    }
     want = {
         (r["pk"], r["n"], r["chars"])
         for r in _part_build(spark, spark.read.parquet(src)).collect()
     }
-    assert got == want
+
+    def got():
+        return {
+            (r["pk"], r["n"], r["chars"])
+            for r in spark.read.parquet(out).collect()
+        }
+
+    # (a) stranded staging dir from a crashed build
+    staging = out + storage.BUILDING
+    os.makedirs(os.path.join(staging, "pk=9"), exist_ok=True)
+    open(os.path.join(staging, "pk=9", "part-junk.parquet"), "w").write("junk")
+    # (b) a promote crash: live partition dir renamed aside, gone
+    part = os.path.join(out, "pk=2")
+    os.rename(part, part + storage.RETIRED)
+    # (c) stamp rolled back: signatures claim everything is clean
+    m = run_partitioned_step(spark, "agg", src, "pk", _part_build, lake)
+    assert m["rebuilt"] == []  # the retired copy is restored
+    assert not os.path.exists(staging)
+    assert not os.path.exists(part + storage.RETIRED)
+    assert got() == want
+
+    # (d) live partition dir gone, no retired copy
+    shutil.rmtree(part)
+    m = run_partitioned_step(spark, "agg", src, "pk", _part_build, lake)
+    assert m["rebuilt"] == ["pk=2"]  # missing dir => dirty despite stamp
+    assert got() == want
 
 
 def test_partitioned_step_drops_vanished_source_partition(spark, tmp_path):

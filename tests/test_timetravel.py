@@ -250,3 +250,64 @@ def test_vacuum_sweeps_orphans_and_keeps_checkpoints_sane(spark, tmp_path):
     assert _ids(spark, tmp_path / "tbl") == [100, 101]
     # the post-vacuum checkpoint makes resolution O(1)
     assert plan_read(t)["n_log_reads"] == 1
+
+
+def test_concurrent_checkpoints_never_collide(tmp_path):
+    """Overlapping write_checkpoint calls on one table each stage their
+    pointer through their own temp file: none raises, and every read
+    of ``_last_checkpoint`` parses to one of the written versions.
+    commit_version checkpoints after its publish has succeeded, so an
+    error here would read as a failed commit to a retrying caller."""
+    import sys
+    import threading
+
+    from free_etl_spark.operators.timetravel import write_checkpoint
+
+    t = str(tmp_path / "tbl")
+    log = os.path.join(t, "_log")
+    os.makedirs(log)
+    for v in range(1, 41):
+        with open(os.path.join(log, f"{v:08d}.json"), "w") as f:
+            json.dump(
+                {"version": v, "op": "append", "files": [f"d-{v}/p.parquet"],
+                 "commit_ts": v},
+                f,
+            )
+    versions = (10, 20, 30, 40)
+    write_checkpoint(t, 10)
+    errors: list[BaseException] = []
+    seen: set = set()
+    done = threading.Event()
+
+    def writer(v):
+        try:
+            for _ in range(300):
+                write_checkpoint(t, v)
+        except BaseException as e:  # noqa: BLE001 - collected and asserted
+            errors.append(e)
+
+    def reader():
+        while not done.is_set():
+            try:
+                with open(os.path.join(log, "_last_checkpoint")) as f:
+                    seen.add(json.load(f)["version"])
+            except BaseException as e:  # noqa: BLE001 - collected and asserted
+                errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=writer, args=(v,)) for v in versions]
+        r = threading.Thread(target=reader)
+        r.start()
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join()
+        done.set()
+        r.join()
+    finally:
+        sys.setswitchinterval(old)
+    assert not errors, f"{len(errors)} errors, first: {errors[0]!r}"
+    assert seen and seen <= set(versions)
+    assert not [n for n in os.listdir(log) if n.endswith(".tmp")]
