@@ -31,7 +31,9 @@ def connected_components(
 ) -> DataFrame:
     """Return (``node_col``, component) where component is the minimum
     node id reachable from the node (nodes absent from ``edges`` form
-    singleton components).
+    singleton components). Raises ``RuntimeError`` if labels still
+    change after ``max_iter`` rounds: the labels would split
+    components that are connected.
     """
     # edges may sit on an expensive lineage (e.g. the whole near-dup
     # pair pipeline) — checkpoint the symmetrized edge list ONCE so the
@@ -67,5 +69,9 @@ def connected_components(
         )
         if not obs.get["chg"]:
             break
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iter} rounds"
+        )
 
     return labels.select(F.col("a").alias(node_col), F.col("label").alias("component"))

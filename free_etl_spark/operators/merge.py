@@ -14,8 +14,15 @@ a table format adds multi-partition atomicity, nothing else changes.
 
 from __future__ import annotations
 
+import json
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from free_etl_spark import storage
+
+_APPLIED = "_applied_batch.json"
 
 
 def upsert_parquet(
@@ -319,13 +326,51 @@ def merge_additive_parquet(
     and must ACCUMULATE across batches — with plain ``==`` it would
     never match and every batch would append a fresh NULL-key row,
     silently breaking the "any batch slicing converges to the full
-    recompute" contract for nullable key columns."""
-    merged = _merged_additive(spark, target_dir, delta, key_cols, add_cols)
-    if merged is delta:
-        delta.write.mode("overwrite").parquet(target_dir)
-        return
-    out = merged.localCheckpoint(eager=True)
-    out.write.mode("overwrite").parquet(target_dir)
+    recompute" contract for nullable key columns.
+
+    The merged MV is staged beside the target and published with
+    ``storage.promote``, carrying forward the applied-batch mark of
+    ``merge_additive_once``. Not idempotent: a replay adds the delta
+    again."""
+    storage.heal(target_dir)
+    _publish_merged(
+        spark, target_dir, delta, key_cols, add_cols, _applied_batch(target_dir)
+    )
+
+
+def merge_additive_once(
+    spark: SparkSession,
+    target_dir: str,
+    delta: DataFrame,
+    key_cols: list[str],
+    add_cols: list[str],
+    batch_id: int,
+) -> bool:
+    """Replay-safe additive merge for foreachBatch. Returns True if
+    the merge ran, False if the batch was already applied.
+
+    The MV records the highest applied ``batch_id`` in
+    ``_applied_batch.json`` inside its own dir (Spark's reader skips
+    ``_`` files), and a batch at or below it is skipped: Delta's
+    txnAppId/txnVersion rule, sound because foreachBatch ids only
+    increase. The record is written into the staged MV before
+    ``storage.promote``, so data and record publish in one rename;
+    after a crash anywhere, ``storage.heal`` leaves either the old MV
+    with the old record or the new MV with the new one."""
+    storage.heal(target_dir)
+    applied = _applied_batch(target_dir)
+    if applied is not None and batch_id <= applied:
+        return False
+    _publish_merged(spark, target_dir, delta, key_cols, add_cols, batch_id)
+    return True
+
+
+def _applied_batch(target_dir: str) -> int | None:
+    try:
+        with open(os.path.join(target_dir, _APPLIED)) as f:
+            return json.load(f)["batch_id"]
+    except FileNotFoundError:
+        return None
 
 
 def _merged_additive(
@@ -336,10 +381,8 @@ def _merged_additive(
     add_cols: list[str],
 ) -> DataFrame:
     """The merged-MV frame (or ``delta`` itself when no target exists
-    yet) — shared by the in-place and staged-write paths."""
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(target_dir)  # noqa: SLF001
-    fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())  # noqa: SLF001
-    if not fs.exists(jvm_path):
+    yet)."""
+    if not os.path.isdir(target_dir):
         return delta
     target = spark.read.parquet(target_dir)
     u = delta.select(*[F.col(c).alias(f"__u_{c}") for c in delta.columns])
@@ -362,141 +405,21 @@ def _merged_additive(
     return joined.select(*out_cols)
 
 
-def _checked_rename(fs, src, dst, batch_id) -> None:
-    """Hadoop ``FileSystem.rename`` reports failure by returning False
-    (not raising), and renaming into a still-existing directory nests
-    the source INSIDE it — either outcome, unchecked, silently
-    corrupts the staged-swap protocol. Raise so the batch aborts with
-    no marker and the stream retries it."""
-    if not fs.rename(src, dst):
-        raise IOError(
-            f"fs.rename({src}, {dst}) returned false — aborting "
-            f"batch {batch_id} before marker creation"
-        )
-
-
-def merge_additive_once(
+def _publish_merged(
     spark: SparkSession,
     target_dir: str,
     delta: DataFrame,
     key_cols: list[str],
     add_cols: list[str],
-    applied_dir: str,
-    batch_id: int,
-) -> bool:
-    """Replay-safe wrapper for the additive MV merge inside
-    foreachBatch: additive merges are NOT idempotent, so each applied
-    batch_id is recorded as a marker file and a replayed batch is
-    skipped. Returns True if the merge ran, False if skipped.
-
-    Staged-write protocol (instead of overwrite-in-place): the merged
-    MV lands fully in a staging generation dir first, then the swap is
-    three driver-side metadata ops — retire old target, rename staging
-    to target, create marker. A crash during the (possibly long)
-    parquet write leaves the old MV untouched; the remaining
-    double-apply window after the final rename is closed by recovery:
-    the state (retired exists AND target exists AND staging absent AND
-    marker absent) is reachable ONLY by a crash between the
-    staging→target rename and marker creation — the batch IS applied,
-    so recovery creates the marker and returns False rather than
-    re-merging the delta (which would double-count it). A crash
-    between retire and rename is likewise recovered: the retired dir
-    carries the batch_id and is restored before re-merging.
-
-    The first-ever batch has no target to retire, which would make
-    "applied but marker missed" (target exists, nothing else)
-    indistinguishable from "never ran" — so before its staging→target
-    rename a SENTINEL retired dir (containing ``__EMPTY_MV__``) is
-    created, meaning "the prior state was no-target". Recovery then
-    sees the same (retired ∃ ∧ target ∃ ∧ staging ∄) applied-state
-    signature for batch 0 as for every later batch; a crash between
-    sentinel creation and the rename restores no-target by deleting
-    the sentinel instead of renaming it over the target.
-
-    Every fs.rename() result is asserted: Hadoop's FileSystem.rename
-    reports failure by returning False, not raising, and renaming into
-    a still-existing target dir silently nests the source INSIDE it —
-    an unchecked failed retire followed by the staging rename would
-    leave stale MV rows at top level plus a nested stage dir while
-    still creating the marker (silent data loss). On a failed rename
-    the batch aborts with no marker, so the stream retries it."""
-    import os
-
-    os.makedirs(applied_dir, exist_ok=True)
-    marker = os.path.join(applied_dir, f"batch_{batch_id}")
-
-    conf = spark._jsc.hadoopConfiguration()  # noqa: SLF001
-    Path = spark._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001,N806
-    tgt = Path(target_dir)
-    fs = tgt.getFileSystem(conf)
-    staging = Path(f"{target_dir}__stage_b{batch_id}")
-    retired = Path(f"{target_dir}__retired_b{batch_id}")
-
-    if os.path.exists(marker):
-        # Marker present = batch applied. A crash between marker
-        # creation and the final fs.delete(retired) strands a FULL
-        # pre-image copy of the MV (at scale, the whole table) —
-        # sweep this batch's leftovers before skipping, or the leak
-        # is permanent: later batches use their own suffixes and
-        # never look at this one again.
-        for leftover in (staging, retired):
-            if fs.exists(leftover):
-                fs.delete(leftover, True)
-        return False
-
-    def _rename(src, dst):
-        _checked_rename(fs, src, dst, batch_id)
-
-    # Crash recovery, in causal order of the swap protocol:
-    # (a) renamed staging→target but died before the marker: retired +
-    #     target both exist, staging gone — the batch IS applied;
-    #     finish the bookkeeping (marker, drop retired) and skip.
-    if (
-        fs.exists(retired)
-        and fs.exists(tgt)
-        and not fs.exists(staging)
-    ):
-        open(marker, "w").close()
-        fs.delete(retired, True)
-        return False
-    # (b) died between retiring the target (or creating the first-
-    #     batch sentinel) and the staging→target rename: marker
-    #     absent, batch NOT applied. A real retired dir holds the MV
-    #     — restore it; the first-batch sentinel means the prior
-    #     state was "no target" — delete it. Either way fall through
-    #     to a clean re-merge.
-    if fs.exists(retired) and not fs.exists(tgt):
-        # An EMPTY retired dir (neither the __EMPTY_MV__ file nor any
-        # data file) is also the sentinel: it can only arise from a
-        # crash between the sentinel dir's creation and its marker
-        # file's — renaming it over the absent target would wedge
-        # every retry on reading an empty dir as parquet.
-        if fs.exists(Path(retired, "__EMPTY_MV__")) or len(
-            fs.listStatus(retired)
-        ) == 0:
-            fs.delete(retired, True)
-        else:
-            _rename(retired, tgt)
-    for leftover in (staging, retired):
-        if fs.exists(leftover):
-            fs.delete(leftover, True)
-
-    merged = _merged_additive(spark, target_dir, delta, key_cols, add_cols)
-    merged.write.mode("overwrite").parquet(staging.toString())
-    had_target = fs.exists(tgt)
-    if had_target:
-        _rename(tgt, retired)
-    else:
-        # first batch: no target to retire — create the sentinel so a
-        # crash after the next rename is still recognizable as
-        # "applied" (see docstring; without it the post-rename state
-        # looks like "never ran" and retry double-counts the delta).
-        # One FS op, not mkdirs-then-create: fs.create makes parent
-        # dirs itself, and the recovery above additionally treats a
-        # bare empty retired dir as the sentinel — both halves of
-        # closing the non-atomic-creation window flagged in r10.
-        fs.create(Path(retired, "__EMPTY_MV__")).close()
-    _rename(staging, tgt)
-    open(marker, "w").close()
-    fs.delete(retired, True)
-    return True
+    batch_id: int | None,
+) -> None:
+    """Stage the merged MV with its applied-batch record, then promote."""
+    staged = target_dir + storage.BUILDING
+    _merged_additive(spark, target_dir, delta, key_cols, add_cols).write.mode(
+        "overwrite"
+    ).parquet(staged)
+    if batch_id is not None:
+        storage.write_atomic(
+            os.path.join(staged, _APPLIED), json.dumps({"batch_id": batch_id})
+        )
+    storage.promote(target_dir, staged)

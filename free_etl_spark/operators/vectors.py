@@ -874,63 +874,30 @@ def ivf_delete(del_ids: DataFrame, path: str) -> None:
 
 def ivf_compact(spark, path: str) -> DataFrame:
     """Physically apply pending tombstones: rewrite ONLY the cluster
-    partitions that actually contain tombstoned vectors (dynamic
-    partition overwrite — untouched cent_id directories keep their
-    committed files byte-identical), then retire the tombstone set.
+    partitions that actually contain tombstoned vectors (untouched
+    cent_id directories keep their committed files byte-identical),
+    then retire the tombstone set.
 
-    Staged-swap protocol (the operators/merge.py family, simplified
-    because compaction IS idempotent — the tombstone dir is the WAL
-    and is only retired at the very end):
-
-    1. Write the cleaned affected partitions to ``{path}__compact_stage``
-       (Spark stamps ``_SUCCESS`` on commit — the completeness marker).
-    2. Per affected cluster, two checked metadata ops: delete the old
-       ``cent_id=N`` dir, rename the staged one in.
-    3. Delete the stage dir, then delete ``_tombstones``.
-
-    Crash recovery on re-entry: a stage dir WITHOUT ``_SUCCESS`` is a
-    half-written artifact of a crash during (1) — dropped and rebuilt;
-    a stage dir WITH ``_SUCCESS`` is the authoritative clean copy of
-    its partitions — its swaps are finished first (so a crash between
-    delete and rename in (2) loses nothing). Probes stay CORRECT the
-    whole time — tombstones keep masking until the end — with one
-    documented availability caveat: a cluster is briefly unreadable
-    between its delete and rename, so run compaction as an offline
-    maintenance step, as every LSM store does.
+    The tombstone dir is the WAL, so compaction needs no marker of its
+    own: the cleaned affected cells are written once, partitioned, to
+    a stage beside the store; each staged ``cent_id=N`` replaces its
+    live cell with ``storage.promote``; cells left empty are dropped;
+    ``_tombstones`` is deleted last. ``storage.heal_tree`` on entry
+    resolves a crashed swap and discards the stage, and until the
+    tombstones go, a re-run recomputes only the cells that still hold
+    tombstoned rows. Probes stay CORRECT the whole time — tombstones
+    keep masking until the end — with one availability caveat: a
+    cluster is briefly unreadable between the two renames of its
+    promote, so run compaction as an offline maintenance step, as
+    every LSM store does.
 
     Returns the per-cluster compaction report (cent_id, n_removed) so
     callers can audit what was rewritten. Cost: O(affected partitions),
     not O(corpus)."""
     import os
+    import shutil
 
-    jvm = spark._jvm
-    Path = jvm.org.apache.hadoop.fs.Path  # noqa: N806
-    fs = Path(path).getFileSystem(spark._jsc.hadoopConfiguration())
-    stage = f"{path}__compact_stage"
-
-    def _swap_staged() -> None:
-        """Move every staged cent_id dir over its live counterpart."""
-        for st in fs.listStatus(Path(stage)):
-            name = st.getPath().getName()
-            if not name.startswith("cent_id="):
-                continue
-            live = Path(os.path.join(path, name))
-            if fs.exists(live):
-                fs.delete(live, True)
-            if not fs.rename(st.getPath(), live):
-                raise IOError(
-                    f"fs.rename({st.getPath()}, {live}) returned false "
-                    "— aborting compaction before tombstone retirement"
-                )
-        fs.delete(Path(stage), True)
-
-    # recovery: finish (complete stage) or discard (partial stage)
-    if fs.exists(Path(stage)):
-        if fs.exists(Path(os.path.join(stage, "_SUCCESS"))):
-            _swap_staged()
-        else:
-            fs.delete(Path(stage), True)
-
+    storage.heal_tree(path)
     tomb = ivf_tombstones(spark, path)
     report_schema = "cent_id INT, n_removed BIGINT"
     if tomb is None:
@@ -941,31 +908,33 @@ def ivf_compact(spark, path: str) -> DataFrame:
         .groupBy("cent_id")
         .agg(F.count(F.lit(1)).alias("n_removed"))
     )
-    report = [(int(r.cent_id), int(r.n_removed)) for r in hit.collect()]
+    report = sorted((int(r.cent_id), int(r.n_removed)) for r in hit.collect())
     if report:
         affected = [cid for cid, _ in report]
+        stage = path + storage.BUILDING
         clean = data.filter(F.col("cent_id").isin(affected)).join(
             F.broadcast(tomb), "vec_id", "left_anti"
         )
         _by_cell(clean).write.mode("overwrite").partitionBy("cent_id").parquet(
             stage
         )
-        # a fully-tombstoned cluster writes NO staged dir — its live
-        # dir must be dropped outright or retiring the tombstones
-        # would resurrect it (recovery-safe: until the tombstones go,
-        # a re-run recomputes the same emptiness and re-deletes)
         for cid in affected:
-            if not fs.exists(Path(os.path.join(stage, f"cent_id={cid}"))):
-                fs.delete(Path(os.path.join(path, f"cent_id={cid}")), True)
-        _swap_staged()
+            cell = f"cent_id={cid}"
+            if os.path.isdir(os.path.join(stage, cell)):
+                storage.promote(os.path.join(path, cell), os.path.join(stage, cell))
+            else:
+                # a fully-tombstoned cluster stages nothing: drop its
+                # live dir, or retiring the tombstones would resurrect it
+                shutil.rmtree(os.path.join(path, cell))
+        shutil.rmtree(stage)
     # retire the WAL last — see crash-safety note above
-    fs.delete(Path(os.path.join(path, "_tombstones")), True)
+    shutil.rmtree(os.path.join(path, "_tombstones"))
     if report and pq_meta(path) is not None:
         # rows were physically removed: refresh the decoded-residual
         # sidecar (offline maintenance, same budget class as the
         # compaction rewrite itself)
         write_decoded_sidecar(spark, path)
-    return spark.createDataFrame(sorted(report), report_schema)
+    return spark.createDataFrame(report, report_schema)
 
 
 def ivf_recluster(
@@ -1150,98 +1119,54 @@ def ivf_recluster_incremental(
          codebook (their residuals changed with their centroid);
          everything else keeps its bytes.
       5. The decoded-residual sidecar gets the SAME treatment
-         (rewrite partitions swapped, appended rows' decodes staged
-         and file-moved in), ``_codebook`` is overwritten with the
-         updated centroids, the freshness sig is re-stamped, and the
-         stage is retired.
+         (rewrite partitions replaced, appended rows' decodes moved
+         in), ``_codebook`` is replaced with the updated centroids and
+         the freshness sig is re-stamped.
 
     Crash safety: everything — rewritten partitions, appended part
     files, sidecar partitions/appends, the new codebook — is staged
-    first; the stage is COMPLETE only once ``_apply.json`` exists
-    (written last). The apply is idempotent: a staged rewrite dir is
-    deleted-then-renamed in (absent = already applied), a staged
-    append file is moved in (absent = already moved), emptied cids
-    are recorded in the marker and deleted unconditionally. Re-entry
-    with a complete stage finishes the apply; an incomplete stage is
-    discarded (recomputed from the untouched live store). The sig is
-    stamped last, so a crash anywhere leaves the sidecar detectably
-    stale (readers fall back to on-the-fly decode).
+    first, then ``storage.seal``ed with the emptied cids, and
+    ``storage.roll_forward`` applies the stage with ``storage.move_in``
+    moves (a staged cell replaces its live one; staged append files,
+    named by the stage job's UUID, join theirs). Re-entry finishes a
+    sealed stage and discards an unsealed one (recomputed from the
+    untouched live store). The sig is stamped last, so a crash
+    anywhere leaves the sidecar detectably stale (readers fall back
+    to on-the-fly decode).
 
     Tombstoned rows are excluded from drift statistics but carried
     through the rewrite unchanged (they stay masked; ivf_compact is
     the operation that physically removes them).
 
     Returns the updated codebook read back from the promoted store."""
-    import json
     import os
     import shutil
 
     stage = path.rstrip("/") + "__recluster_inc_stage"
-    apply_marker = os.path.join(stage, "_apply.json")
+    decoded = os.path.join(path, "_pq_decoded")
 
-    def _apply_stage() -> None:
-        """Idempotent application of a COMPLETE stage (see docstring);
-        shared by the normal path and crash recovery."""
-        with open(apply_marker) as f:
-            mark = json.load(f)
+    def _apply(mark: dict) -> None:
         for cid in mark["emptied"]:
-            live = os.path.join(path, f"cent_id={cid}")
-            if os.path.isdir(live):
-                shutil.rmtree(live)
-        for sub, target in (
-            ("rewrite", path),
-            ("rewrite_dec", os.path.join(path, "_pq_decoded")),
-        ):
+            for root in (path, decoded):
+                cell = os.path.join(root, f"cent_id={cid}")
+                if os.path.isdir(cell):
+                    shutil.rmtree(cell)
+        # the rewrite dir also carries the new ``_codebook``
+        storage.move_in(os.path.join(stage, "rewrite"), path)
+        storage.move_in(os.path.join(stage, "rewrite_dec"), decoded)
+        for sub, root in (("append", path), ("append_dec", decoded)):
             sdir = os.path.join(stage, sub)
             if not os.path.isdir(sdir):
                 continue
-            if sub == "rewrite_dec":
-                for cid in mark["emptied"]:
-                    d = os.path.join(target, f"cent_id={cid}")
-                    if os.path.isdir(d):
-                        shutil.rmtree(d)
-            for name in sorted(os.listdir(sdir)):
-                if name.startswith("cent_id="):
-                    live = os.path.join(target, name)
-                    if os.path.isdir(live):
-                        shutil.rmtree(live)
-                    os.rename(os.path.join(sdir, name), live)
-        for sub, target in (
-            ("append", path),
-            ("append_dec", os.path.join(path, "_pq_decoded")),
-        ):
-            sdir = os.path.join(stage, sub)
-            if not os.path.isdir(sdir):
-                continue
-            for name in sorted(os.listdir(sdir)):
-                if not name.startswith("cent_id="):
-                    continue
-                live = os.path.join(target, name)
-                os.makedirs(live, exist_ok=True)
-                # file-level moves (data + .crc shadows): staged part
-                # names carry the stage job's UUID, collision-free
-                for fn in os.listdir(os.path.join(sdir, name)):
-                    os.rename(
-                        os.path.join(sdir, name, fn), os.path.join(live, fn)
+            for cell in os.listdir(sdir):
+                if cell.startswith("cent_id="):
+                    storage.move_in(
+                        os.path.join(sdir, cell), os.path.join(root, cell)
                     )
-        cb_new_dir = os.path.join(stage, "_codebook_new")
-        if os.path.isdir(cb_new_dir):
-            # promote by directory swap — the staged dir is a complete
-            # Spark-committed parquet dir; re-reading and re-writing
-            # it cost a listing + read + write job per apply
-            live_cb = os.path.join(path, "_codebook")
-            if os.path.isdir(live_cb):
-                shutil.rmtree(live_cb)
-            os.rename(cb_new_dir, live_cb)
         if pq_meta(path) is not None:
             _stamp_decoded(spark, path)
 
-    # recovery: a COMPLETE stage (marker present) is applied; an
-    # incomplete one is a crashed build — discarded (recomputed below)
-    if os.path.isdir(stage):
-        if os.path.exists(apply_marker):
-            _apply_stage()
-        shutil.rmtree(stage, ignore_errors=True)
+    storage.roll_forward(stage, _apply)
 
     with _maintenance_scope(spark):
         cent = spark.read.parquet(os.path.join(path, "_codebook"))
@@ -1295,7 +1220,7 @@ def ivf_recluster_incremental(
         # Localize the updated codebook (driver cap honored — K counted
         # from the store's cell directories, no job): it is referenced by
         # the broadcast argmin, the PQ re-encode residuals AND the staged
-        # ``_codebook_new`` write, and as a lazy join each reference
+        # ``_codebook`` write, and as a lazy join each reference
         # re-ran the member-mean pass over the drifted cells.
         k_store = sum(
             1 for d in os.listdir(path) if d.startswith("cent_id=")
@@ -1406,7 +1331,7 @@ def ivf_recluster_incremental(
                 os.path.join(stage, "append_dec")
             )
         cent_upd.write.mode("overwrite").parquet(
-            os.path.join(stage, "_codebook_new")
+            os.path.join(stage, "rewrite", "_codebook")
         )
         scored.unpersist()
         emptied = [
@@ -1414,11 +1339,7 @@ def ivf_recluster_incremental(
             for c in rewrite_set
             if not os.path.isdir(os.path.join(stage, "rewrite", f"cent_id={c}"))
         ]
-        storage.write_atomic(  # stage is now COMPLETE
-            apply_marker,
-            json.dumps({"rewrite": rewrite_set, "emptied": emptied}),
-        )
+        storage.seal(stage, {"emptied": emptied})
     # 5. apply + retire
-    _apply_stage()
-    shutil.rmtree(stage, ignore_errors=True)
+    storage.roll_forward(stage, _apply)
     return spark.read.parquet(os.path.join(path, "_codebook"))

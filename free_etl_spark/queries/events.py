@@ -4160,7 +4160,7 @@ def events_error_budget_burn(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM per_user u CROSS JOIN pooled p
     )
     SELECT arm, CAST(COUNT(*) AS BIGINT) AS n,
-           FLOOR(AVG(post) * 1e4) / 1e4 AS mean_post,
+           FLOOR(ROUND(SUM(post), 2) / COUNT(*) * 1e4) / 1e4 AS mean_post,
            FLOOR(AVG(y) * 1e4) / 1e4 AS mean_adjusted,
            FLOOR(var_samp(post) * 1e2) / 1e2 AS var_post,
            FLOOR(var_samp(y) * 1e2) / 1e2 AS var_adjusted,
@@ -4181,7 +4181,10 @@ def events_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     adjusted variances are a second grouped aggregate. Reported
     var_reduction is the realized shrinkage. FLOOR-2/4 absorbs
     summation-order ulps in the second moments (welch precedent;
-    variances here are O(1e5))."""
+    variances here are O(1e5)). ``post`` sums lie on the 0.01 grid,
+    so mean_post divides the ROUNDed sum (one IEEE division, the same
+    in both engines); a floored AVG's last digit would depend on the
+    summation order."""
     ev = load_table(spark, sf_dir, "events")
     cut = F.lit("2024-01-16").cast("date")
     is_p = F.col("event_type") == "purchase"
@@ -4212,7 +4215,9 @@ def events_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return adj.groupBy("arm").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        (F.floor(F.avg("post") * 1e4) / 1e4).alias("mean_post"),
+        (
+            F.floor(F.round(F.sum("post"), 2) / F.count(F.lit(1)) * 1e4) / 1e4
+        ).alias("mean_post"),
         (F.floor(F.avg("y") * 1e4) / 1e4).alias("mean_adjusted"),
         (F.floor(F.var_samp("post") * 1e2) / 1e2).alias("var_post"),
         (F.floor(F.var_samp("y") * 1e2) / 1e2).alias("var_adjusted"),

@@ -1554,8 +1554,9 @@ def source_time_travel_timestamp(spark: SparkSession, sf_dir: str) -> DataFrame:
     (VERDICT r13 task 1), driven by operators/timetravel.py — the
     productionized log, not a hand-built fixture: five commits with
     deterministic caller-supplied commit_ts and checkpoint_interval=2
-    (consolidated checkpoints at v2 and v4 + a _last_checkpoint
-    pointer, the Delta shape), then three timestamp-bound reads:
+    (consolidated checkpoints at v2 and v4, the Delta shape; each read
+    takes the newest checkpoint at or below its version from the log
+    listing), then three timestamp-bound reads:
 
       - '…01-02T12:00' → v2, resolved from checkpoint v2 alone
         (1 manifest read)
@@ -1572,7 +1573,7 @@ def source_time_travel_timestamp(spark: SparkSession, sf_dir: str) -> DataFrame:
     At production commit rates (thousands of versions) this is the
     difference between a read planning in one small-file read and a
     read paying O(versions) round-trips to object storage — exactly
-    why Delta has _last_checkpoint. Versions carry contents:
+    why Delta checkpoints its log. Versions carry contents:
     v1 overwrite (o_orderkey % 3 = 0) → v2 append (% 3 = 1) →
     v3 append (% 3 = 2) → v4 overwrite (status 'O') → v5 append
     (status 'F')."""

@@ -356,12 +356,11 @@ def streaming_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     the full recompute — which is the oracle.
 
     Replay safety: additive merges are NOT idempotent (a recovery
-    replay would double-count), so each applied batch_id is recorded
-    as a marker file and replayed batches are skipped — the
-    batch-id-dedup contract foreachBatch requires for non-idempotent
-    sinks. A transactional table format would make marker+merge
-    atomic; on plain parquet the marker lands after the merge,
-    narrowing (not closing) the crash window — documented trade.
+    replay would double-count), so each batch goes through
+    merge_additive_once, which records the applied batch_id inside the
+    MV and skips replayed batches — the batch-id-dedup contract
+    foreachBatch requires for non-idempotent sinks. The record
+    publishes in the same rename as the merged MV.
 
     Gate cost is fixed micro-batch machinery (2 triggers + checkpoint
     + per-batch MV rewrite), volume-independent (~0.4 s/batch
@@ -378,7 +377,6 @@ def streaming_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"_{spark.sparkContext.applicationId}"
     )
     shutil.rmtree(target, ignore_errors=True)
-    shutil.rmtree(f"{target}_applied", ignore_errors=True)
     shutil.rmtree(f"{target}_changes", ignore_errors=True)
 
     def mv_agg(df: DataFrame) -> DataFrame:
@@ -409,7 +407,6 @@ def streaming_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(changes_dir)
     )
 
-    applied_dir = f"{target}_applied"
     n_batches = []
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -421,7 +418,6 @@ def streaming_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
             mv_agg(batch_df),
             ["event_type", "hr"],
             ["n_events", "value_sum"],
-            applied_dir,
             batch_id,
         )
         if ran:

@@ -502,9 +502,11 @@ def test_ivf_delete_masks_and_compacts(spark, tmp_path):
     }
     assert masked == expect_live
 
-    # (d-1) a stage dir without _SUCCESS (crash during staging write)
-    # must be discarded, not swapped in
-    stale_stage = f"{path}__compact_stage"
+    # (d-1) a stage dir left by a crash during the staging write must
+    # be discarded, not swapped in
+    from free_etl_spark import storage
+
+    stale_stage = path + storage.BUILDING
     os.makedirs(os.path.join(stale_stage, "cent_id=999999"))
     open(os.path.join(stale_stage, "cent_id=999999", "junk.parquet"), "w").close()
 
@@ -1013,8 +1015,7 @@ def test_ivf_recluster_incremental_parity_and_locality(spark, tmp_path):
     (c) rows in drifted lists carry codes re-encoded against the
     updated codebook, and the decoded sidecar is fresh; (d) an
     incomplete stage is discarded on re-entry, a COMPLETE stage
-    (marker present) is finished."""
-    import json
+    (sealed) is finished."""
     import os
     import shutil
 
@@ -1186,10 +1187,11 @@ def test_ivf_recluster_incremental_parity_and_locality(spark, tmp_path):
         staged_rows.select("vec_id", "cent_id", "pq_code"), pq_cb
     ).write.partitionBy("cent_id").parquet(os.path.join(stage, "rewrite_dec"))
     spark.read.parquet(os.path.join(path, "_codebook")).write.parquet(
-        os.path.join(stage, "_codebook_new")
+        os.path.join(stage, "rewrite", "_codebook")
     )
-    with open(os.path.join(stage, "_apply.json"), "w") as f:
-        json.dump({"rewrite": [cid0], "emptied": []}, f)
+    from free_etl_spark import storage
+
+    storage.seal(stage, {"emptied": []})
     ivf_recluster_incremental(spark, path, drifted=[])
     assert not os.path.exists(stage)
     healed = {

@@ -114,12 +114,12 @@ def test_session_cache_lives_only_in_cache_py():
 
 
 def test_commit_protocol_lives_only_in_storage_py():
-    """free_etl_spark/storage.py is the one home of the rename-aside
-    promote, its heal and the atomic stamp: no other module may call
-    ``os.rename``/``os.replace`` or spell a swap suffix itself.
-    vectors.ivf_recluster_incremental is exempt: it rolls a completed
-    stage forward under its ``_apply.json`` marker, a different
-    protocol."""
+    """free_etl_spark/storage.py is the one home of every publish: the
+    rename-aside promote, its heal, the roll-forward moves and the
+    atomic and exclusive file publishes. No other module may call
+    ``os.rename``/``os.replace``/``os.link``, call any ``.rename(``
+    method (Hadoop's ``FileSystem.rename`` included), or spell a swap
+    suffix itself."""
     import ast
 
     from free_etl_spark.storage import BUILDING, RETIRED
@@ -134,20 +134,15 @@ def test_commit_protocol_lives_only_in_storage_py():
                 if a.name == "os":
                     self.os_names.add(a.asname or "os")
 
-        def visit_FunctionDef(self, node):
-            if (self.rel, node.name) != (
-                "free_etl_spark/operators/vectors.py",
-                "ivf_recluster_incremental",
-            ):
-                self.generic_visit(node)
-
         def visit_Call(self, node):
             f = node.func
-            if (
-                isinstance(f, ast.Attribute)
-                and isinstance(f.value, ast.Name)
-                and f.value.id in self.os_names
-                and f.attr in ("rename", "replace")
+            if isinstance(f, ast.Attribute) and (
+                f.attr == "rename"
+                or (
+                    isinstance(f.value, ast.Name)
+                    and f.value.id in self.os_names
+                    and f.attr in ("replace", "link")
+                )
             ):
                 found.append(f"{self.rel}:{node.lineno} {ast.unparse(f)}")
             self.generic_visit(node)

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import pandas as pd
 import pyspark.sql.functions as F
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -121,6 +122,18 @@ def test_connected_components_matches_union_find(spark, n_nodes, edge_idx):
     )
     got = sorted(map(tuple, connected_components(nodes_df, edges_df).collect()))
     assert got == _union_find_components(n_nodes, edges)
+
+
+def test_connected_components_raises_when_not_converged(spark):
+    """Min-label propagation moves a label one hop per round, so a
+    60-node path needs 59 rounds: at the default 50 it must raise
+    rather than return the path split into components."""
+    from free_etl_spark.operators.components import connected_components
+
+    nodes_df = spark.createDataFrame([(i,) for i in range(60)], "id long")
+    edges_df = spark.createDataFrame([(i, i + 1) for i in range(59)], "src long, dst long")
+    with pytest.raises(RuntimeError, match="did not converge in 50 rounds"):
+        connected_components(nodes_df, edges_df).collect()
 
 
 def _brute_asof_fwd(left, right):

@@ -557,7 +557,8 @@ def test_cdc_with_deletes_recovers_after_kill(spark, tmp_path):
 def test_merge_additive_replay_marker_prevents_double_count(spark, tmp_path):
     """merge_additive_parquet is deliberately NOT idempotent (additive
     states double on re-apply); streaming_mv_refresh therefore skips
-    replayed batch_ids via marker files. Pin both halves: re-applying
+    replayed batch_ids via merge_additive_once's applied-batch record.
+    Pin both halves: re-applying
     the same delta doubles the state (so the helper alone is unsafe
     under replay), and the MV after seed+delta equals the direct
     aggregate of the union."""
@@ -579,8 +580,8 @@ def test_merge_additive_replay_marker_prevents_double_count(spark, tmp_path):
         for r in spark.read.parquet(target).collect()
     }
     assert got == {"a": (2, 10.0), "b": (4, 12.0), "c": (1, 1.0)}
-    # replay WITHOUT the marker guard: state doubles — the hazard the
-    # batch-id markers in streaming_mv_refresh exist to prevent
+    # replay WITHOUT the batch-id guard: state doubles — the hazard
+    # merge_additive_once exists to prevent
     merge_additive_parquet(spark, target, delta, ["k"], ["n", "s"])
     got2 = {r.k: r.n for r in spark.read.parquet(target).collect()}
     assert got2["b"] == 7 and got2["c"] == 2
@@ -604,7 +605,6 @@ def test_streaming_mv_refresh_recovers_after_kill(spark, tmp_path):
 
     schema = "k string, n long, s double"
     target = str(tmp_path / "mv")
-    applied = str(tmp_path / "applied")
     seed = spark.createDataFrame([("a", 2, 10.0), ("b", 1, 5.0)], schema)
     merge_additive_parquet(spark, target, seed, ["k"], ["n", "s"])
 
@@ -626,9 +626,7 @@ def test_streaming_mv_refresh_recovers_after_kill(spark, tmp_path):
     calls: list[int] = []
 
     def bomb(batch_df, batch_id):
-        merge_additive_once(
-            spark, target, batch_df, ["k"], ["n", "s"], applied, batch_id
-        )
+        merge_additive_once(spark, target, batch_df, ["k"], ["n", "s"], batch_id)
         calls.append(batch_id)
         if len(calls) == 1:
             raise RuntimeError("killed after merge, before commit")
@@ -656,9 +654,7 @@ def test_streaming_mv_refresh_recovers_after_kill(spark, tmp_path):
             lambda df, bid: replays.append(
                 (
                     bid,
-                    merge_additive_once(
-                        spark, target, df, ["k"], ["n", "s"], applied, bid
-                    ),
+                    merge_additive_once(spark, target, df, ["k"], ["n", "s"], bid),
                 )
             )
         )
@@ -699,194 +695,220 @@ def test_merge_additive_null_key_accumulates(spark, tmp_path):
     assert got["a"] == (2, 2.0) and got["b"] == (1, 1.0)
 
 
-def test_merge_additive_once_staged_write_recovery(spark, tmp_path):
-    """Staged-write protocol crash windows: (1) a crash that renamed
-    the target away but died before renaming staging in (marker
-    absent) is recovered on the next call — the retired dir is
-    restored and the batch applies exactly once; (2) leftover staging
-    junk from a crash mid-parquet-write is cleared and the old MV is
-    untouched until the staged write completes; (3) a marker still
-    skips replays."""
-    import os
+def _mv(spark, target):
+    return {r.k: (r.n, r.s) for r in spark.read.parquet(target).collect()}
 
-    from free_etl_spark.operators.merge import (
-        merge_additive_once,
-        merge_additive_parquet,
-    )
+
+def test_merge_additive_once_staged_write_recovery(spark, tmp_path):
+    """Crash between the two renames of the promote: the MV sits
+    aside as ``__retired`` with no live dir, and a half-written
+    ``__building`` stage is left behind. The retry restores the
+    retired copy, applies the batch exactly once and leaves no
+    debris; a replay of the applied batch is then skipped."""
+    from free_etl_spark import storage
+    from free_etl_spark.operators.merge import merge_additive_once
 
     schema = "k string, n long, s double"
     target = str(tmp_path / "mv")
-    applied = str(tmp_path / "applied")
     seed = spark.createDataFrame([("a", 1, 1.0)], schema)
-    merge_additive_parquet(spark, target, seed, ["k"], ["n", "s"])
+    assert merge_additive_once(spark, target, seed, ["k"], ["n", "s"], 6)
 
-    # crash state: batch 7 retired the target, never renamed staging in
-    os.rename(target, f"{target}__retired_b7")
-    os.makedirs(f"{target}__stage_b7")  # half-written staging junk
+    os.rename(target, target + storage.RETIRED)
+    os.makedirs(target + storage.BUILDING)  # half-written stage
     delta = spark.createDataFrame([("a", 2, 2.0), ("b", 5, 5.0)], schema)
-    ran = merge_additive_once(
-        spark, target, delta, ["k"], ["n", "s"], applied, 7
-    )
-    assert ran is True
-    got = {r.k: (r.n, r.s) for r in spark.read.parquet(target).collect()}
-    assert got == {"a": (3, 3.0), "b": (5, 5.0)}
-    assert not os.path.exists(f"{target}__retired_b7")
-    assert not os.path.exists(f"{target}__stage_b7")
-    # replay of an applied batch is skipped
-    assert (
-        merge_additive_once(spark, target, delta, ["k"], ["n", "s"], applied, 7)
-        is False
-    )
+    assert merge_additive_once(spark, target, delta, ["k"], ["n", "s"], 7)
+    assert _mv(spark, target) == {"a": (3, 3.0), "b": (5, 5.0)}
+    assert not os.path.exists(target + storage.RETIRED)
+    assert not os.path.exists(target + storage.BUILDING)
+    assert not merge_additive_once(spark, target, delta, ["k"], ["n", "s"], 7)
+    assert _mv(spark, target) == {"a": (3, 3.0), "b": (5, 5.0)}
 
 
 def test_merge_additive_once_marker_missed_recovery(spark, tmp_path):
-    """The crash window AFTER rename(staging, target) but BEFORE
-    marker creation: the state (retired exists AND target exists AND
-    staging absent AND marker absent) uniquely identifies 'batch
-    applied, marker missed'. Recovery must create the marker and
-    return False — NOT re-merge the delta, which would double-count
-    the batch (ADVICE r8)."""
-    import os
-
+    """Crash after the publish, before the retired pre-image is
+    deleted: the live MV already carries the batch's record, so the
+    retry must recognise the batch as applied and return False rather
+    than merge the delta a second time, and it must drop the stale
+    pre-image."""
+    from free_etl_spark import storage
     from free_etl_spark.operators.merge import (
+        _applied_batch,
         merge_additive_once,
-        merge_additive_parquet,
     )
 
     schema = "k string, n long, s double"
     target = str(tmp_path / "mv")
-    applied = str(tmp_path / "applied")
-    # batch 3 already fully applied into target...
-    seed = spark.createDataFrame([("a", 3, 3.0)], schema)
-    merge_additive_parquet(spark, target, seed, ["k"], ["n", "s"])
-    # ...and the crash left the retired pre-image behind, no marker
     pre = spark.createDataFrame([("a", 1, 1.0)], schema)
-    pre.write.parquet(f"{target}__retired_b3")
-
+    assert merge_additive_once(spark, target, pre, ["k"], ["n", "s"], 2)
     delta = spark.createDataFrame([("a", 2, 2.0)], schema)
-    ran = merge_additive_once(
-        spark, target, delta, ["k"], ["n", "s"], applied, 3
-    )
-    assert ran is False  # batch recognized as applied, not re-merged
-    got = {r.k: (r.n, r.s) for r in spark.read.parquet(target).collect()}
-    assert got == {"a": (3, 3.0)}  # NOT (5, 5.0) — no double-apply
-    assert not os.path.exists(f"{target}__retired_b3")
-    assert os.path.exists(os.path.join(applied, "batch_3"))
-    # and a genuine replay is now marker-skipped too
-    assert (
-        merge_additive_once(spark, target, delta, ["k"], ["n", "s"], applied, 3)
-        is False
-    )
+    assert merge_additive_once(spark, target, delta, ["k"], ["n", "s"], 3)
+    # the crash left the pre-image beside the published MV
+    pre.write.parquet(target + storage.RETIRED)
 
-
-def test_checked_rename_raises_on_false():
-    """Hadoop FileSystem.rename reports failure by returning False;
-    an unchecked false retire followed by the staging rename nests
-    staging inside the live target (silent data loss + a marker). The
-    swap protocol must raise on a false return so the batch aborts
-    with no marker (ADVICE r8)."""
-    from free_etl_spark.operators.merge import _checked_rename
-
-    class FakeFS:
-        def __init__(self, ok):
-            self.ok = ok
-            self.calls = []
-
-        def rename(self, src, dst):
-            self.calls.append((src, dst))
-            return self.ok
-
-    good = FakeFS(True)
-    _checked_rename(good, "a", "b", 1)  # no raise
-    assert good.calls == [("a", "b")]
-    bad = FakeFS(False)
-    with pytest.raises(IOError, match="returned false"):
-        _checked_rename(bad, "a", "b", 1)
+    assert not merge_additive_once(spark, target, delta, ["k"], ["n", "s"], 3)
+    assert _mv(spark, target) == {"a": (3, 3.0)}  # NOT (5, 5.0)
+    assert not os.path.exists(target + storage.RETIRED)
+    assert _applied_batch(target) == 3
+    # a genuine replay is skipped too
+    assert not merge_additive_once(spark, target, delta, ["k"], ["n", "s"], 3)
+    assert _mv(spark, target) == {"a": (3, 3.0)}
 
 
 def test_merge_additive_once_first_batch_marker_missed(spark, tmp_path):
-    """The FIRST-ever batch has no target to retire, so without extra
-    state a crash between rename(staging, target) and marker creation
-    would leave (target exists, nothing else) — indistinguishable from
-    'never ran', and the retry would re-merge the delta into the
-    already-applied target (ADVICE r9). The sentinel retired dir
-    (__EMPTY_MV__) makes that state recognizable: retry must return
-    False and leave the MV unchanged. Also: a crash between sentinel
-    creation and the rename (sentinel + staging present, no target)
-    must restore 'no target' — delete the sentinel, not rename it in —
-    and then apply cleanly."""
-    import os
-
-    from free_etl_spark.operators.merge import merge_additive_once
+    """The first-ever batch has no MV to set aside, so its two crash
+    windows are: (1) stage written, crash before the publish rename —
+    no live dir, a ``__building`` leftover; the retry discards it and
+    applies once; (2) publish landed — the live MV carries the batch
+    record, so the retry returns False and leaves the MV unchanged."""
+    from free_etl_spark import storage
+    from free_etl_spark.operators.merge import (
+        _applied_batch,
+        merge_additive_once,
+    )
 
     schema = "k string, n long, s double"
     target = str(tmp_path / "mv")
-    applied = str(tmp_path / "applied")
-
-    # window 1: sentinel created, staging written, crash before the
-    # staging->target rename. State: retired(sentinel) + staging, no
-    # target, no marker. Batch NOT applied -> clean re-merge.
-    os.makedirs(f"{target}__retired_b0")
-    open(f"{target}__retired_b0/__EMPTY_MV__", "w").close()
-    os.makedirs(f"{target}__stage_b0")  # half-written staging junk
     delta0 = spark.createDataFrame([("a", 1, 1.0)], schema)
-    ran = merge_additive_once(
-        spark, target, delta0, ["k"], ["n", "s"], applied, 0
-    )
-    assert ran is True
-    got = {r.k: (r.n, r.s) for r in spark.read.parquet(target).collect()}
-    assert got == {"a": (1, 1.0)}
-    assert not os.path.exists(f"{target}__retired_b0")
 
-    # window 2: first batch fully renamed in, sentinel still present,
-    # marker missed. Retry must recognize 'applied', not double-count.
-    os.remove(os.path.join(applied, "batch_0"))
-    os.makedirs(f"{target}__retired_b0")
-    open(f"{target}__retired_b0/__EMPTY_MV__", "w").close()
-    ran = merge_additive_once(
-        spark, target, delta0, ["k"], ["n", "s"], applied, 0
-    )
-    assert ran is False
-    got = {r.k: (r.n, r.s) for r in spark.read.parquet(target).collect()}
-    assert got == {"a": (1, 1.0)}  # NOT (2, 2.0) — no double-apply
-    assert not os.path.exists(f"{target}__retired_b0")
-    assert os.path.exists(os.path.join(applied, "batch_0"))
+    # window 1: a complete stage never published
+    delta0.write.parquet(target + storage.BUILDING)
+    assert merge_additive_once(spark, target, delta0, ["k"], ["n", "s"], 0)
+    assert _mv(spark, target) == {"a": (1, 1.0)}
+    assert not os.path.exists(target + storage.BUILDING)
+
+    # window 2: published, retried
+    assert not merge_additive_once(spark, target, delta0, ["k"], ["n", "s"], 0)
+    assert _mv(spark, target) == {"a": (1, 1.0)}  # NOT (2, 2.0)
+    assert _applied_batch(target) == 0
 
 
 def test_merge_additive_once_bare_empty_retired_recovery(spark, tmp_path):
-    """The residual window ADVICE r10 flagged: a crash between the
-    sentinel dir's creation and its __EMPTY_MV__ file leaves a BARE
-    empty retired dir with no target. Recovery must treat it as the
-    sentinel (delete it and re-merge cleanly) — renaming it over the
-    absent target would wedge every retry on reading an empty dir as
-    parquet. (The window itself is also closed — sentinel creation is
-    now a single fs.create — but recovery stays tolerant for dirs left
-    by older code or exotic filesystems.)"""
-    import os
-
+    """A crash right after the first batch's stage dir was created,
+    before any file landed in it, leaves a bare empty ``__building``
+    dir and no MV. The retry must discard it (reading it as parquet
+    would wedge every retry), apply the batch once, and leave a
+    healthy store in which the next batch accumulates."""
+    from free_etl_spark import storage
     from free_etl_spark.operators.merge import merge_additive_once
 
     schema = "k string, n long, s double"
     target = str(tmp_path / "mv")
-    applied = str(tmp_path / "applied")
 
-    os.makedirs(f"{target}__retired_b0")  # bare: no __EMPTY_MV__, no data
+    os.makedirs(target + storage.BUILDING)  # bare: no data, no record
     delta0 = spark.createDataFrame([("a", 1, 1.0)], schema)
-    ran = merge_additive_once(
-        spark, target, delta0, ["k"], ["n", "s"], applied, 0
-    )
-    assert ran is True  # batch was NOT applied — clean merge, once
-    got = {r.k: (r.n, r.s) for r in spark.read.parquet(target).collect()}
-    assert got == {"a": (1, 1.0)}
-    assert not os.path.exists(f"{target}__retired_b0")
-    # and the store is healthy: the next batch accumulates normally
+    assert merge_additive_once(spark, target, delta0, ["k"], ["n", "s"], 0)
+    assert _mv(spark, target) == {"a": (1, 1.0)}
+    assert not os.path.exists(target + storage.BUILDING)
     delta1 = spark.createDataFrame([("a", 2, 2.0)], schema)
-    assert (
-        merge_additive_once(spark, target, delta1, ["k"], ["n", "s"], applied, 1)
-        is True
+    assert merge_additive_once(spark, target, delta1, ["k"], ["n", "s"], 1)
+    assert _mv(spark, target) == {"a": (3, 3.0)}
+
+
+class _Killed(RuntimeError):
+    """Injected crash for the promote kill matrix."""
+
+
+@pytest.mark.parametrize(
+    "label, first_batch, kill_at, perform, retry_ran",
+    [
+        # later batch: stage complete, crash BEFORE setting the MV
+        # aside — old MV intact, retry applies exactly once
+        ("before_retire", False, 1, False, True),
+        # crash AFTER rename(live, retired) — no live MV on disk;
+        # retry restores the retired copy then applies once
+        ("after_retire", False, 1, True, True),
+        # crash AFTER rename(staged, live) — the batch record published
+        # with the data; retry must NOT double-count
+        ("after_promote", False, 2, True, False),
+        # first-ever batch: stage complete, crash before the publish
+        # rename — retry discards the stage, applies once
+        ("first_before_promote", True, 1, False, True),
+        # first-ever batch published — retry skips it
+        ("first_after_promote", True, 1, True, False),
+    ],
+)
+def test_merge_additive_once_kill_matrix(
+    spark, tmp_path, monkeypatch, label, first_batch, kill_at, perform, retry_ran
+):
+    """Run the real promote and kill it at each rename (before or
+    after the rename lands), then retry: the batch must apply exactly
+    once and no ``__retired``/``__building`` debris may remain."""
+    from free_etl_spark import storage
+    from free_etl_spark.operators.merge import (
+        _applied_batch,
+        merge_additive_once,
     )
-    got = {r.k: (r.n, r.s) for r in spark.read.parquet(target).collect()}
-    assert got == {"a": (3, 3.0)}
+
+    schema = "k string, n long, s double"
+    target = str(tmp_path / "mv")
+
+    if first_batch:
+        batch_id = 0
+        delta = spark.createDataFrame([("a", 1, 1.0)], schema)
+        expect = {"a": (1, 1.0)}
+    else:
+        seed = spark.createDataFrame([("a", 1, 1.0)], schema)
+        assert merge_additive_once(spark, target, seed, ["k"], ["n", "s"], 0)
+        batch_id = 1
+        delta = spark.createDataFrame([("a", 2, 2.0), ("b", 5, 5.0)], schema)
+        expect = {"a": (3, 3.0), "b": (5, 5.0)}
+
+    real_rename = os.rename
+    calls = {"n": 0}
+
+    def killer(src, dst):
+        if not str(src).startswith(target):
+            return real_rename(src, dst)
+        calls["n"] += 1
+        if calls["n"] == kill_at:
+            if perform:
+                real_rename(src, dst)
+            raise _Killed(label)
+        real_rename(src, dst)
+
+    monkeypatch.setattr(storage.os, "rename", killer)
+    with pytest.raises(_Killed):
+        merge_additive_once(spark, target, delta, ["k"], ["n", "s"], batch_id)
+    monkeypatch.setattr(storage.os, "rename", real_rename)
+    # the batch record is live exactly when the publish rename landed
+    assert (_applied_batch(target) == batch_id) is (not retry_ran)
+
+    ran = merge_additive_once(spark, target, delta, ["k"], ["n", "s"], batch_id)
+    assert ran is retry_ran
+    assert _mv(spark, target) == expect
+    assert _applied_batch(target) == batch_id
+    assert not os.path.exists(target + storage.RETIRED)
+    assert not os.path.exists(target + storage.BUILDING)
+    # idempotent replay after recovery
+    assert not merge_additive_once(
+        spark, target, delta, ["k"], ["n", "s"], batch_id
+    )
+    assert _mv(spark, target) == expect
+
+
+def test_merge_additive_once_marker_skip_sweeps_stranded_retired(
+    spark, tmp_path
+):
+    """Crash after the publish but before the retired pre-image (a
+    full copy of the MV) is deleted: the skipped retry must still
+    sweep that copy and any stage leftover, or it leaks for good."""
+    from free_etl_spark import storage
+    from free_etl_spark.operators.merge import merge_additive_once
+
+    schema = "k string, n long, s double"
+    target = str(tmp_path / "mv")
+    seed = spark.createDataFrame([("a", 1, 1.0)], schema)
+    assert merge_additive_once(spark, target, seed, ["k"], ["n", "s"], 0)
+    delta = spark.createDataFrame([("a", 2, 2.0)], schema)
+    assert merge_additive_once(spark, target, delta, ["k"], ["n", "s"], 1)
+    # crash state: pre-image never deleted
+    seed.write.parquet(target + storage.RETIRED)
+    os.makedirs(target + storage.BUILDING)
+
+    assert not merge_additive_once(spark, target, delta, ["k"], ["n", "s"], 1)
+    assert _mv(spark, target) == {"a": (3, 3.0)}
+    assert not os.path.exists(target + storage.RETIRED)
+    assert not os.path.exists(target + storage.BUILDING)
 
 
 def test_rocksdb_state_store_matches_hdfs_backend(spark):
@@ -926,137 +948,6 @@ def test_rocksdb_state_store_matches_hdfs_backend(spark):
     finally:
         spark.conf.set(key, default)
     assert rocks == base and len(base) > 0
-
-
-class _Killed(RuntimeError):
-    """Injected crash for the swap-protocol kill matrix."""
-
-
-@pytest.mark.parametrize(
-    "label, first_batch, kill_at, perform, retry_ran",
-    [
-        # non-first batch: staged write done, crash BEFORE retiring
-        # the target — old MV intact, retry applies exactly once
-        ("before_retire", False, 1, False, True),
-        # crash AFTER rename(target, retired) — no target on disk;
-        # retry restores the retired pre-image then applies once
-        ("after_retire", False, 1, True, True),
-        # crash AFTER rename(staging, target), marker missed — the
-        # applied-state signature; retry must NOT double-count
-        ("after_promote", False, 2, True, False),
-        # first-ever batch: sentinel + staging written, crash before
-        # the promote rename — retry deletes the sentinel, applies
-        ("first_before_promote", True, 1, False, True),
-        # first-ever batch applied, sentinel still present, marker
-        # missed — retry recognizes 'applied' via the sentinel
-        ("first_after_promote", True, 1, True, False),
-    ],
-)
-def test_merge_additive_once_kill_matrix(
-    spark, tmp_path, monkeypatch, label, first_batch, kill_at, perform, retry_ran
-):
-    """Kill-injection matrix over the staged-swap protocol (VERDICT
-    r11 task 7): instead of hand-crafting crash states, run the REAL
-    protocol and kill it at each rename boundary (optionally after
-    the rename lands), then retry and require the batch answer with
-    exactly-once semantics and no leftover stage/retired dirs."""
-    import os
-
-    import free_etl_spark.operators.merge as merge_mod
-    from free_etl_spark.operators.merge import merge_additive_once
-
-    schema = "k string, n long, s double"
-    target = str(tmp_path / "mv")
-    applied = str(tmp_path / "applied")
-
-    if first_batch:
-        batch_id = 0
-        delta = spark.createDataFrame([("a", 1, 1.0)], schema)
-        expect = {"a": (1, 1.0)}
-    else:
-        seed = spark.createDataFrame([("a", 1, 1.0)], schema)
-        assert merge_additive_once(
-            spark, target, seed, ["k"], ["n", "s"], applied, 0
-        )
-        batch_id = 1
-        delta = spark.createDataFrame([("a", 2, 2.0), ("b", 5, 5.0)], schema)
-        expect = {"a": (3, 3.0), "b": (5, 5.0)}
-
-    real_rename = merge_mod._checked_rename
-    calls = {"n": 0}
-
-    def killer(fs, src, dst, bid):
-        calls["n"] += 1
-        if calls["n"] == kill_at:
-            if perform:
-                real_rename(fs, src, dst, bid)
-            raise _Killed(label)
-        real_rename(fs, src, dst, bid)
-
-    monkeypatch.setattr(merge_mod, "_checked_rename", killer)
-    with pytest.raises(_Killed):
-        merge_additive_once(
-            spark, target, delta, ["k"], ["n", "s"], applied, batch_id
-        )
-    # no marker may exist unless the promote rename landed
-    assert not os.path.exists(os.path.join(applied, f"batch_{batch_id}"))
-    monkeypatch.setattr(merge_mod, "_checked_rename", real_rename)
-
-    ran = merge_additive_once(
-        spark, target, delta, ["k"], ["n", "s"], applied, batch_id
-    )
-    assert ran is retry_ran
-    got = {r.k: (r.n, r.s) for r in spark.read.parquet(target).collect()}
-    assert got == expect
-    assert os.path.exists(os.path.join(applied, f"batch_{batch_id}"))
-    assert not os.path.exists(f"{target}__retired_b{batch_id}")
-    assert not os.path.exists(f"{target}__stage_b{batch_id}")
-    # idempotent replay after recovery
-    assert (
-        merge_additive_once(
-            spark, target, delta, ["k"], ["n", "s"], applied, batch_id
-        )
-        is False
-    )
-    got = {r.k: (r.n, r.s) for r in spark.read.parquet(target).collect()}
-    assert got == expect
-
-
-def test_merge_additive_once_marker_skip_sweeps_stranded_retired(
-    spark, tmp_path
-):
-    """The kill window AFTER marker creation but BEFORE the final
-    fs.delete(retired): the batch is applied and marker-skipped on
-    retry, but without a sweep the retired dir — a FULL pre-image
-    copy of the MV — leaks forever (later batches use their own
-    suffixes and never revisit it). The marker-exists path must
-    clean this batch's leftovers."""
-    import os
-
-    from free_etl_spark.operators.merge import merge_additive_once
-
-    schema = "k string, n long, s double"
-    target = str(tmp_path / "mv")
-    applied = str(tmp_path / "applied")
-    seed = spark.createDataFrame([("a", 1, 1.0)], schema)
-    assert merge_additive_once(
-        spark, target, seed, ["k"], ["n", "s"], applied, 0
-    )
-    delta = spark.createDataFrame([("a", 2, 2.0)], schema)
-    assert merge_additive_once(
-        spark, target, delta, ["k"], ["n", "s"], applied, 1
-    )
-    # crash state: marker written, retired pre-image never deleted
-    seed.write.parquet(f"{target}__retired_b1")
-    os.makedirs(f"{target}__stage_b1")
-    ran = merge_additive_once(
-        spark, target, delta, ["k"], ["n", "s"], applied, 1
-    )
-    assert ran is False
-    got = {r.k: (r.n, r.s) for r in spark.read.parquet(target).collect()}
-    assert got == {"a": (3, 3.0)}
-    assert not os.path.exists(f"{target}__retired_b1")
-    assert not os.path.exists(f"{target}__stage_b1")
 
 
 def test_streaming_ann_probe_equals_batch(spark):

@@ -252,34 +252,58 @@ def test_vacuum_sweeps_orphans_and_keeps_checkpoints_sane(spark, tmp_path):
     assert plan_read(t)["n_log_reads"] == 1
 
 
-def test_concurrent_checkpoints_never_collide(tmp_path):
-    """Overlapping write_checkpoint calls on one table each stage their
-    pointer through their own temp file: none raises, and every read
-    of ``_last_checkpoint`` parses to one of the written versions.
-    commit_version checkpoints after its publish has succeeded, so an
-    error here would read as a failed commit to a retrying caller."""
-    import sys
-    import threading
-
-    from free_etl_spark.operators.timetravel import write_checkpoint
-
-    t = str(tmp_path / "tbl")
+def _hand_made_log(t, n=40):
     log = os.path.join(t, "_log")
     os.makedirs(log)
-    for v in range(1, 41):
+    for v in range(1, n + 1):
         with open(os.path.join(log, f"{v:08d}.json"), "w") as f:
             json.dump(
                 {"version": v, "op": "append", "files": [f"d-{v}/p.parquet"],
                  "commit_ts": v},
                 f,
             )
+    return log
+
+
+def _run_threads(targets):
+    import sys
+    import threading
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=fn) for fn in targets]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join()
+    finally:
+        sys.setswitchinterval(old)
+
+
+def test_concurrent_checkpoints_never_collide(tmp_path):
+    """Overlapping write_checkpoint calls on one table each stage their
+    checkpoint through their own temp file: none raises, and every
+    checkpoint a concurrent reader lists parses whole. commit_version
+    checkpoints after its publish has succeeded, so an error here
+    would read as a failed commit to a retrying caller."""
+    import threading
+
+    from free_etl_spark.operators.timetravel import write_checkpoint
+
+    t = str(tmp_path / "tbl")
+    log = _hand_made_log(t)
     versions = (10, 20, 30, 40)
     write_checkpoint(t, 10)
     errors: list[BaseException] = []
     seen: set = set()
     done = threading.Event()
 
-    def writer(v):
+    def writers():
+        _run_threads([lambda v=v: write_checkpoint_300(v) for v in versions])
+        done.set()
+
+    def write_checkpoint_300(v):
         try:
             for _ in range(300):
                 write_checkpoint(t, v)
@@ -289,25 +313,60 @@ def test_concurrent_checkpoints_never_collide(tmp_path):
     def reader():
         while not done.is_set():
             try:
-                with open(os.path.join(log, "_last_checkpoint")) as f:
-                    seen.add(json.load(f)["version"])
+                for n in os.listdir(log):
+                    if n.endswith(".checkpoint.json"):
+                        with open(os.path.join(log, n)) as f:
+                            seen.add(json.load(f)["version"])
             except BaseException as e:  # noqa: BLE001 - collected and asserted
                 errors.append(e)
 
-    old = sys.getswitchinterval()
-    sys.setswitchinterval(1e-6)
-    try:
-        threads = [threading.Thread(target=writer, args=(v,)) for v in versions]
-        r = threading.Thread(target=reader)
-        r.start()
-        for th in threads:
-            th.start()
-        for th in threads:
-            th.join()
-        done.set()
-        r.join()
-    finally:
-        sys.setswitchinterval(old)
+    _run_threads([reader, writers])
     assert not errors, f"{len(errors)} errors, first: {errors[0]!r}"
     assert seen and seen <= set(versions)
     assert not [n for n in os.listdir(log) if n.endswith(".tmp")]
+
+
+def test_latest_read_uses_newest_checkpoint_after_concurrent_checkpoints(tmp_path):
+    """Four threads checkpoint versions 10/20/30/40 of a 40-entry log;
+    whichever finishes last, a latest read opens the version-40
+    checkpoint alone. A pointer file repointed by each call ended
+    below 40 in most trials, and the read then replayed every entry
+    after it."""
+    from free_etl_spark.operators.timetravel import plan_read, write_checkpoint
+
+    for trial in range(20):
+        t = str(tmp_path / f"tbl{trial}")
+        _hand_made_log(t)
+        _run_threads([lambda v=v: write_checkpoint(t, v) for v in (40, 30, 20, 10)])
+        assert plan_read(t)["n_log_reads"] == 1, f"trial {trial}"
+
+
+def test_crashed_publish_leaves_table_readable(spark, tmp_path, monkeypatch):
+    """A commit that dies after its log entry's file is created but
+    before its bytes are written must not publish a version: the table
+    still reads at the old version, and the next commit takes the
+    version the crashed one did not."""
+    import builtins
+
+    t = str(tmp_path / "tbl")
+    commit_version(spark, t, spark.range(0, 3), "overwrite")
+    real_open = builtins.open
+
+    class Crash(RuntimeError):
+        pass
+
+    def crashing_open(file, mode="r", *a, **kw):
+        f = real_open(file, mode, *a, **kw)
+        if "x" in mode:
+            f.close()
+            raise Crash(f"after creating {file}")
+        return f
+
+    with monkeypatch.context() as m:
+        m.setattr(builtins, "open", crashing_open)
+        with pytest.raises(Crash):
+            commit_version(spark, t, spark.range(10, 12), "append")
+    assert latest_version(t) == 1
+    assert _ids(spark, t) == [0, 1, 2]
+    assert commit_version(spark, t, spark.range(20, 22), "append") == 2
+    assert _ids(spark, t) == [0, 1, 2, 20, 21]
